@@ -392,10 +392,15 @@ object StreamBenchApp {
     val t0 = System.nanoTime()
     // State partitions sized to the traffic, the standard streaming
     // tuning knob: a stream-stream join runs FOUR state stores per
-    // partition, so the per-batch fixed cost scales with the
-    // partition count, not the data — at ~2k rows/batch, 32
-    // partitions measured 355 rec/s vs 1,151 at 8 (4 → 1,087, 16 →
-    // 623: the knee). The conf is scoped to this query (state
+    // partition, each committing a delta file per trigger, so the
+    // per-batch fixed cost scales with the partition count, not the
+    // data. On 4 cores at sf0.1 (10×5,000 rows) 8 partitions measured
+    // 622–1,069 rec/s over four runs, 4 partitions 647–1,107 and 32
+    // partitions 554: 4 and 8 sit within that host's noise, and 8
+    // keeps a wide host off a 32-partition session default. (The
+    // older 32-core figures, 355 rec/s at 32 vs 1,151 at 8, were set
+    // by about 20 process spawns per state store per trigger, which
+    // `NioLocalFs` removed.) The conf is scoped to this query (state
     // partition count pins at checkpoint creation; restored in
     // finally, and the batch twin below runs at the session default).
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")

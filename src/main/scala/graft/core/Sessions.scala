@@ -20,13 +20,17 @@ object Sessions {
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def local(appName: String = "graft"): SparkSession =
+  /** Every session the engine, its tests and its mains build: the
+    * settings above plus the `file` scheme served by [[NioLocalFs]], so
+    * checkpoints, state-store deltas and file sinks start no process. */
+  def builder(appName: String = "graft", cores: Int = cpus)
+      : SparkSession.Builder =
     SparkSession
       .builder()
       .withExtensions(graft.functions.GraftFunctions.register)
-      .master(s"local[$cpus]")
+      .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -35,5 +39,11 @@ object Sessions {
       // native type for; read as long nanos (ordering-equivalent).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.hadoop.fs.file.impl",
+        classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
+
+  def local(appName: String = "graft"): SparkSession =
+    builder(appName).getOrCreate()
 }

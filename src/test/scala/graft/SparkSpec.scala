@@ -4,22 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local SparkSession per suite, small
-  * shuffle width for speed, nanos-as-long for events.parquet. */
+/** Shared test harness: one local SparkSession per suite, built by
+  * the engine's own `Sessions.builder` at a fixed 4 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .withExtensions(graft.functions.GraftFunctions.register)
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = graft.core.Sessions
+    .builder(getClass.getSimpleName, cores = 4)
     // fresh warehouse per JVM: saveAsTable leftovers from a previous
     // run would collide with a new (empty) in-memory metastore
     .config("spark.sql.warehouse.dir", java.nio.file.Files
       .createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   /** sf0.001 testdata — the smoke-scale fixtures. */
