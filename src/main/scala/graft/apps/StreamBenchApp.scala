@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
+import graft.core.{Derived, Sessions}
 import graft.ml.{FraudPipeline, Transactions}
 import graft.streaming.ScoringStream
 
@@ -548,8 +548,7 @@ object StreamBenchApp {
             // materialize (decisions collected, digests folded) —
             // free the previous generation instead of leaking one
             // checkpoint per batch
-            val flagged = graft.core.CkptSlots.checkpoint(
-              spark.sparkContext.applicationId + ":ingest_flagged")(
+            val flagged = Derived.slot("ingest_flagged", spark, sfDir)(
               PipelineQueries.flagBatch(spark, sfDir,
                 batchDf, seenDigests))
             val survivors = flagged
@@ -570,8 +569,7 @@ object StreamBenchApp {
             // the alert topic for drops) would receive
             decisions ++= dec.collect().map(r =>
               (r.getLong(0), r.getString(1), r.getString(2)))
-            seenDigests = graft.core.CkptSlots.checkpoint(
-              spark.sparkContext.applicationId + ":ingest_seen")(
+            seenDigests = Derived.slot("ingest_seen", spark, sfDir)(
               seenDigests
                 .unionByName(flagged.select(col("text_md5")))
                 .distinct())
@@ -589,8 +587,7 @@ object StreamBenchApp {
     // flags + window-rank quota per (source, batch)
     import org.apache.spark.sql.expressions.Window
     val bidDf = bidRows.toDF("doc_id", "bid")
-    val flaggedAll = graft.core.CkptSlots.checkpoint(
-      spark.sparkContext.applicationId + ":ingest_twin")(
+    val flaggedAll = Derived.slot("ingest_twin", spark, sfDir)(
       PipelineQueries.deltaFlagged(spark, sfDir)
         .join(bidDf, Seq("doc_id"))) // fed docs only
     val w = Window.partitionBy(col("source"), col("bid"))

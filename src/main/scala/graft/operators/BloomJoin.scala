@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Bloom-filter semi-join reduction — the shuffle-volume cutter for
   * selective fact⋈dim joins at 100 TB. Spark's own
@@ -48,11 +48,9 @@ object BloomJoin {
       Literal.create(bloom, BinaryType),
       GraftSqlShims.expression(xxhash64(key))))
 
-  /** One bloom build per (context, input): the filter is a pure
-    * function of the dim data — same memoization contract as the
-    * layout writes and the KMeans/salt caches. */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Byte]]
+  /** One bloom build per dataset ([[graft.core.Derived.Memo]]): the
+    * filter is a pure function of the dim data. */
+  private val urgentBloom = Derived.Memo[Array[Byte]]("j7_bloom")
 
   /** Urgent-orders revenue through the bloom-reduced semi-join:
     * lineitem rows are pre-filtered by a bloom over the urgent
@@ -63,12 +61,11 @@ object BloomJoin {
     val dim = Tables.orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    val bloom = bloomCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir, {
-        // expectedItems from the dim count: one cheap job over the
-        // filtered dim side (at 100 TB you'd take it from stats)
-        buildBloom(dim, "o_orderkey", math.max(dim.count(), 1L))
-      })
+    val bloom = urgentBloom(s, dir) {
+      // expectedItems from the dim count: one cheap job over the
+      // filtered dim side (at 100 TB you'd take it from stats)
+      buildBloom(dim, "o_orderkey", math.max(dim.count(), 1L))
+    }
     val big = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
     big

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Near-duplicate CLUSTERING for the training-data pipeline: the step
   * after pair detection — fold near-dup pairs into connected
@@ -34,20 +34,15 @@ import graft.core.Tables
 object DedupCluster {
   type Q = (SparkSession, String) => DataFrame
 
-  /** One clustering per (application, sfDir): the cluster table feeds
-    * both dd_cluster_cc and dd_cluster_dedup — the computation is
-    * identical and deterministic, so re-running it per query would
-    * only double bench/verify wall time (same pattern as the shared
-    * trained model in MlQueries). Keyed by applicationId so a new
-    * SparkContext in the same JVM never sees a frame whose
-    * checkpoint blocks died with the previous context. */
-  private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** One clustering per dataset ([[graft.core.Derived.Memo]]): the
+    * cluster table feeds both dd_cluster_cc and dd_cluster_dedup — the
+    * computation is identical and deterministic, so re-running it per
+    * query would only double bench/verify wall time (same pattern as
+    * the shared trained model in MlQueries). */
+  private val clusters = Derived.Memo[DataFrame]("dd_clusters")
 
   def ddClusterCc(s: SparkSession, dir: String): DataFrame =
-    ccCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
-      computeClusterCc(s, dir))
+    clusters(s, dir)(computeClusterCc(s, dir))
 
   private val maxIters = 20
 
@@ -59,7 +54,7 @@ object DedupCluster {
     // stay CONNECTED (bounded O(n) candidates) instead of silently
     // surviving dedup under a drop-the-bucket cap.
     val docs = SimilarityQueries.hashedShingleDocs(s, dir)
-    val cand = SimilarityQueries.lshCandidatePairs(s, docs,
+    val cand = SimilarityQueries.lshCandidatePairs(s, dir, docs,
       nHashes = 32, bands = 8, maxBucket = 50, starHotBuckets = true)
     val pairs = SimilarityQueries.jaccardPairs(docs, cand)
       .filter(col("jaccard") >= thresh)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** The composed corpus-construction pipeline — the end product every
   * individual dd_*, t_*, and l* operator exists to serve, run as ONE
@@ -88,14 +88,11 @@ object PipelineQueries {
     * untouched (it recomputes fresh per invocation — the scan-twin
     * contract); only this pipeline consumer of its doc_id drop list
     * is memoized, exactly like the cluster drop list it sits next to
-    * in [[pipeCorpusBuild]]. Keyed by applicationId so a new
-    * SparkContext never sees dead checkpoint blocks. */
-  private val deconDropCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    * in [[pipeCorpusBuild]] ([[graft.core.Derived.Memo]]). */
+  private val deconDrops = Derived.Memo[DataFrame]("pipe_decon_drops")
 
   private def contaminatedIds(s: SparkSession, dir: String): DataFrame =
-    deconDropCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
+    deconDrops(s, dir)(
       TextQueries.tDecontaminate(s, dir)
         .select(col("doc_id")).localCheckpoint())
 
@@ -103,8 +100,7 @@ object PipelineQueries {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val base = gateProjection(
         Tables.fanOut(Tables.documents(s, dir), "doc_id"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":pipe_base:" + dir))
+      .transform(Derived.slot("pipe_base", s, dir))
       // the staged-materialization point: all six
                          // stage chains and seven funnel aggregates
                          // re-read this slim projection, never the
@@ -180,9 +176,7 @@ object PipelineQueries {
     * compare. */
   def pipeDeltaIngest(s: SparkSession, dir: String): DataFrame = {
     // read by the survivor cut AND the final assembly
-    val flagged = graft.core.CkptSlots.checkpoint(
-      s.sparkContext.applicationId + ":pipe_flagged:" + dir)(
-      deltaFlagged(s, dir))
+    val flagged = Derived.slot("pipe_flagged", s, dir)(deltaFlagged(s, dir))
     val survivors = flagged.filter(col("drop_reason").isNull)
       .select(col("doc_id"), col("source"), col("h"))
     val admits = graft.plans.TopKPerGroup(survivors, Seq("source"),
@@ -210,8 +204,7 @@ object PipelineQueries {
     def isDelta(c: Column) = pmod(c, lit(M.toLong)) === M - 1
     val delta = gateProjection(
         Tables.documents(s, dir).filter(isDelta(col("doc_id"))))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":pipe_delta:" + dir))
+      .transform(Derived.slot("pipe_delta", s, dir))
       // feeds digest probe, keeper census, flags
     flaggedCore(s, dir, delta,
       df => df.filter(isDelta(col("doc_id"))), priorDigests = None,
@@ -255,19 +248,15 @@ object PipelineQueries {
     // the moment the next batch's is materialized (batches are
     // strictly sequential), so each generation frees the previous —
     // a 10-batch gate run used to leak 30 checkpoints
-    // dir in the key (ADVICE r21): two interleaved ingest drivers
-    // over different corpora in one application must not free each
-    // other's live batch state
-    def slot(tag: String) = graft.core.CkptSlots.checkpoint(
-      s.sparkContext.applicationId + ":" + tag + ":" + dir) _
-    val proj = slot("flagbatch_proj")(gateProjection(batchDocs))
-    val sh = slot("flagbatch_sh")(
+    val proj =
+      Derived.slot("flagbatch_proj", s, dir)(gateProjection(batchDocs))
+    val sh = Derived.slot("flagbatch_sh", s, dir)(
       graft.sources.IndexStore.minhashShingles(s, batchDocs))
       // feeds bands AND the fingerprint verify
     val batch = BatchSignatures(
       bands = graft.sources.IndexStore.clusterBandsOf(sh),
       fps = sh.select(col("doc_id"), col("hs")),
-      grams = slot("flagbatch_grams")(
+      grams = Derived.slot("flagbatch_grams", s, dir)(
         graft.sources.IndexStore.gram13Of(batchDocs)))
     val ids = proj.select(col("doc_id"))
     flaggedCore(s, dir, proj,
@@ -293,7 +282,7 @@ object PipelineQueries {
     * tiny relative to the corpus, and eagerly materialized so a batch
     * pays only the batch-dependent joins.
     *
-    * Staleness contract (ADVICE r19): the memo key carries the
+    * Staleness contract (ADVICE r19): the memo generation is the
     * dataset's [[graft.sources.IndexStore.indexVersion]], so any
     * index rebuild/append that goes through the ensure/refresh
     * paths — or a [[graft.sources.Maintenance.refreshAll]] after an
@@ -308,8 +297,7 @@ object PipelineQueries {
   private[graft] case class ProbeCtx(baseDigests: DataFrame,
       small: DataFrame, hotBaseRep: DataFrame, evalGrams: DataFrame)
 
-  private val probeCtxCache =
-    scala.collection.concurrent.TrieMap.empty[String, ProbeCtx]
+  private val probeCtxs = Derived.Memo[ProbeCtx]("pipe_probe_ctx")
 
   private[graft] def probeCtx(s: SparkSession, dir: String): ProbeCtx = {
     // ensure the probed families BEFORE reading the version: a first
@@ -318,41 +306,34 @@ object PipelineQueries {
     val cat = graft.sources.IndexStore.ensureCatalog(s, dir)
     val mh = graft.sources.IndexStore.ensureMinhash(s, dir)
     val g13 = graft.sources.IndexStore.ensureGram13(s, dir)
-    val prefix = s.sparkContext.applicationId + ":" + dir + ":"
-    val key = prefix + "v" + graft.sources.IndexStore.indexVersion(dir)
-    if (!probeCtxCache.contains(key))
-      // drop this (application, dir)'s dead generations — their
-      // localCheckpoints would otherwise pin executor storage until
-      // driver GC
-      probeCtxCache.keys.filter(_.startsWith(prefix))
-        .foreach(probeCtxCache.remove)
-    probeCtxCache.getOrElseUpdate(
-      key, {
-        val M = graft.sources.IndexStore.TrgmDeltaMod
-        def isDelta(c: Column) = pmod(c, lit(M.toLong)) === M - 1
-        val census = s.read.parquet(mh.cstats)
+    // a newer generation replaces the dead one, whose localCheckpoints
+    // would otherwise stay pinned in executor storage
+    probeCtxs(s, dir, gen = graft.sources.IndexStore.indexVersion(dir)) {
+      val M = graft.sources.IndexStore.TrgmDeltaMod
+      def isDelta(c: Column) = pmod(c, lit(M.toLong)) === M - 1
+      val census = s.read.parquet(mh.cstats)
+        .groupBy(col("band"), col("bhash"))
+        .agg(sum(col("n")).cast("long").as("n"))
+        .localCheckpoint()
+      ProbeCtx(
+        baseDigests = s.read.parquet(cat.digests)
+          .filter(col("split") === "base")
+          .select(col("text_md5")).distinct().localCheckpoint(),
+        // no n ≥ 2 lower bound — singleton-BASE buckets are live
+        // probe targets for text-probed NEW docs (see flaggedCore)
+        small = census.filter(col("n") <= 50)
+          .select("band", "bhash").localCheckpoint(),
+        hotBaseRep = s.read.parquet(mh.cstats)
+          .filter(!isDelta(col("rep")))
           .groupBy(col("band"), col("bhash"))
-          .agg(sum(col("n")).cast("long").as("n"))
-          .localCheckpoint()
-        ProbeCtx(
-          baseDigests = s.read.parquet(cat.digests)
-            .filter(col("split") === "base")
-            .select(col("text_md5")).distinct().localCheckpoint(),
-          // no n ≥ 2 lower bound — singleton-BASE buckets are live
-          // probe targets for text-probed NEW docs (see flaggedCore)
-          small = census.filter(col("n") <= 50)
-            .select("band", "bhash").localCheckpoint(),
-          hotBaseRep = s.read.parquet(mh.cstats)
-            .filter(!isDelta(col("rep")))
-            .groupBy(col("band"), col("bhash"))
-            .agg(min(col("rep")).as("b_id"))
-            .join(census.filter(col("n") > 50)
-              .select("band", "bhash"), Seq("band", "bhash"))
-            .localCheckpoint(),
-          evalGrams = s.read.parquet(g13.grams)
-            .filter(col("doc_id") % 17 === 0)
-            .select("g").distinct().localCheckpoint())
-      })
+          .agg(min(col("rep")).as("b_id"))
+          .join(census.filter(col("n") > 50)
+            .select("band", "bhash"), Seq("band", "bhash"))
+          .localCheckpoint(),
+        evalGrams = s.read.parquet(g13.grams)
+          .filter(col("doc_id") % 17 === 0)
+          .select("g").distinct().localCheckpoint())
+    }
   }
 
   /** The shared decision core of [[deltaFlagged]] and [[flagBatch]]:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** The relational operator surface of the engine: every projection /
   * predicate / aggregate / limit operator of the reference
@@ -1285,8 +1285,7 @@ object RelationalQueries {
       .groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice"))).cast("long")
         .as("value_cents"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":q11_census:" + dir))
+      .transform(Derived.slot("q11_census", s, dir))
     val cut = v.agg(
       (lit(Q11MeanMult) * avg(col("value_cents"))).as("cut"))
     v.crossJoin(broadcast(cut))

@@ -192,7 +192,7 @@ object ScaleRehearsal {
       // --- bucket census: candidates + hot-bucket drops (search
       // layout: 4 bands × 8 rows, cap 50, drop hot)
       val docs = SimilarityQueries.hashedShingleDocs(spark, dir)
-      val cand = SimilarityQueries.lshCandidatePairs(spark, docs,
+      val cand = SimilarityQueries.lshCandidatePairs(spark, dir, docs,
         nHashes = 32, bands = 4, maxBucket = 50,
         starHotBuckets = false)
       val (nCand, _, _) = time(cand.count())
@@ -267,10 +267,9 @@ object ScaleRehearsal {
       // after its class collapse (the planted pile is 1 rep, not c
       // identical prefix row sets)
       val (nEdCand, tEdCand, gEdCand) = time(
-        SimilarityQueries.edJoinCandidates(
+        SimilarityQueries.edJoinCandidates(spark, dir,
           SimilarityQueries.edJoinRepKeys(spark, dir),
-          slotTag = spark.sparkContext.applicationId +
-            ":rehearsal_edjoin_prefix:" + dir).count())
+          slot = "rehearsal_edjoin_prefix").count())
       val (nEdPairs, tEdJoin, gEdJoin) = {
         val (df, t, g) = time {
           val d = SimilarityQueries.ddEdJoin(spark, dir)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Near-duplicate detection + similarity search for the training-data
   * pipeline: MinHash+LSH, SimHash, n-gram Jaccard, and
@@ -82,15 +82,14 @@ object SimilarityQueries {
 
   /** (doc_id, hs): distinct word-3gram hashes per document — the
     * shared input of every shingle-based near-dup operator.
-    * Memoized per (app, dir): slim, deterministic, consumed by the
-    * minhash pair search AND the clustering pipeline. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    * Memoized per dataset ([[graft.core.Derived.Memo]]): slim,
+    * deterministic, consumed by the minhash pair search AND the
+    * clustering pipeline. */
+  private val shingles = Derived.Memo[DataFrame]("shingle_docs")
 
   private[operators] def hashedShingleDocs(s: SparkSession,
       dir: String): DataFrame =
-    shingleCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
+    shingles(s, dir)(
       // fanOut: the shingle hashing below is the expensive part and
       // would otherwise run inside the single-row-group scan task
       Tables.fanOut(Tables.documents(s, dir), "doc_id")
@@ -124,18 +123,17 @@ object SimilarityQueries {
     * multiple anchors per bucket (min + evenly spaced members) at
     * K× the candidate rows; this engine documents the single-anchor
     * contract instead of paying that multiplier blind. */
-  private[operators] def lshCandidatePairs(s: SparkSession,
+  private[operators] def lshCandidatePairs(s: SparkSession, dir: String,
       docs: DataFrame, nHashes: Int, bands: Int, maxBucket: Int,
-      starHotBuckets: Boolean, slotKey: Option[String] = None)
+      starHotBuckets: Boolean, slot: Option[String] = None)
       : DataFrame = {
     graft.functions.MinhashSig.ensureRegistered(s)
     val rows = nHashes / bands
-    val ckpt: DataFrame => DataFrame = slotKey match {
-      // per-invocation callers (ddMinhashLsh) pass a slot key so the
+    val ckpt: DataFrame => DataFrame = slot match {
+      // per-invocation callers (ddMinhashLsh) name a slot so the
       // previous generation's banded checkpoint is freed; memoized
       // callers (computeClusterCc) keep the plain one-time checkpoint
-      case Some(k) => graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":" + k)
+      case Some(name) => Derived.slot(name, s, dir)
       case None => _.localCheckpoint()
     }
     val banded = docs
@@ -205,9 +203,8 @@ object SimilarityQueries {
     * between a bounded join and a runaway one). */
   def ddMinhashLsh(s: SparkSession, dir: String): DataFrame = {
     val docs = hashedShingleDocs(s, dir)
-    val cand = lshCandidatePairs(s, docs, nHashes = 32, bands = 4,
-      maxBucket = 50, starHotBuckets = false,
-      slotKey = Some("mh_banded:" + dir))
+    val cand = lshCandidatePairs(s, dir, docs, nHashes = 32, bands = 4,
+      maxBucket = 50, starHotBuckets = false, slot = Some("mh_banded"))
     jaccardPairs(docs, cand)
       .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
       .limit(20)
@@ -260,16 +257,13 @@ object SimilarityQueries {
     * Gram hashes use the engine-portable md5-60 hash
     * (graft.core.PortableHash) so the full bit-vote is replicated in
     * the DuckDB oracle. */
-  /** One simhash pass per (JVM, sfDir): the hash table feeds both
-    * dd_simhash and dd_simhash_pairs; it is deterministic, slim
-    * (doc_id + one long), and localCheckpointed by the consumer. */
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** One simhash pass per dataset ([[graft.core.Derived.Memo]]): the
+    * hash table feeds both dd_simhash and dd_simhash_pairs; it is
+    * deterministic, slim (doc_id + one long), and localCheckpointed. */
+  private val simhashes = Derived.Memo[DataFrame]("simhash_docs")
 
   def ddSimhash(s: SparkSession, dir: String): DataFrame =
-    simhashCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
-      computeSimhash(s, dir).localCheckpoint())
+    simhashes(s, dir)(computeSimhash(s, dir).localCheckpoint())
 
   private def computeSimhash(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
@@ -435,8 +429,7 @@ object SimilarityQueries {
       .select(col("doc_id"),
         transform(wordGramExpr("words", 3), g => xxhash64(g)).as("g"))
       .withColumn("bucket", array_min(col("g")))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":ngram_docs:" + dir))
+      .transform(Derived.slot("ngram_docs", s, dir))
       // consumed by census + both join sides
     val smallBuckets = docs.groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"))
@@ -912,8 +905,7 @@ object SimilarityQueries {
     val emb = cleanEmbeddings(s, dir)
       .select(col("vec_id"), col("e"))
       .withColumn("bucket", expr(s"signlsh_bucket(e, $planes)"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":embnd:" + dir))
+      .transform(Derived.slot("embnd", s, dir))
       // consumed by both self-join sides
     val a = emb.select(col("bucket"), col("vec_id").as("id_a"),
       col("e").as("e_a"))
@@ -1093,8 +1085,7 @@ object SimilarityQueries {
     val planes = AnnPlanes
     val emb = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $planes)"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":lsh_adapt:" + dir))
+      .transform(Derived.slot("lsh_adapt", s, dir))
       // re-read once per radius level
     val qRow = emb.filter(col("vec_id") === 0)
       .select(col("bucket"), col("e")).head()
@@ -1705,8 +1696,7 @@ object SimilarityQueries {
     graft.functions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":exact_pairs:" + dir))
+      .transform(Derived.slot("exact_pairs", s, dir))
       // consumed by both self-join sides
     val n = emb.count() // cheap: counts the checkpointed blocks
     require(n <= ExactPairsMaxRows,
@@ -1815,8 +1805,7 @@ object SimilarityQueries {
     val members = edJoinKeys(s, dir)
       .withColumn("kid",
         min(col("doc_id")).over(Window.partitionBy(col("k"))))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":edjoin_members:" + dir))
+      .transform(Derived.slot("edjoin_members", s, dir))
     val reps = members.filter(col("doc_id") === col("kid"))
       .select(col("doc_id"), col("k"))
     // one candidate row + one banded-levenshtein verify per DISTINCT
@@ -1834,8 +1823,7 @@ object SimilarityQueries {
     // that survived measurement is the checkpointed prefix inside
     // edJoinCandidates (computed once instead of once per self-join
     // side).
-    val classPairs = edJoinCandidates(reps,
-        slotTag = s.sparkContext.applicationId + ":edjoin_prefix:" + dir)
+    val classPairs = edJoinCandidates(s, dir, reps, slot = "edjoin_prefix")
       .join(reps.select(col("doc_id").as("id_a"), col("k").as("ka")),
         "id_a")
       .join(reps.select(col("doc_id").as("id_b"), col("k").as("kb")),
@@ -1896,8 +1884,8 @@ object SimilarityQueries {
     * docs, the position filter cuts candidates 129.6M → 27.9M
     * (4.6×) and end-to-end wall 230 → 23 s (10×, the banded
     * levenshtein compounding); growth exponent 1.17 → 1.03. */
-  private[operators] def edJoinCandidates(keys: DataFrame,
-      q: Int = EdJoinQ, slotTag: String = ""): DataFrame = {
+  private[operators] def edJoinCandidates(s: SparkSession, dir: String,
+      keys: DataFrame, slot: String, q: Int = EdJoinQ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val prefixLen = EdJoinMaxDist * q + 1
     // Pigeonhole floor (ADVICE r16): a key of length L has L−q+1
@@ -1942,12 +1930,9 @@ object SimilarityQueries {
     // frequency census, AND the per-doc ranking window (r22, measured
     // at sf0.1: candidates 0.92 → 0.69 s; the saved recompute grows
     // with the corpus — the census aggregates every gram occurrence).
-    // Callers with a stable call-site tag get the slot-keyed
-    // checkpoint (one live generation, freed on the next invocation);
-    // tagless callers (specs probing shapes) keep the pure plan.
-    val prefix =
-      if (slotTag.isEmpty) prefixPlan
-      else graft.core.CkptSlots.checkpoint(slotTag)(prefixPlan)
+    // The caller's slot holds one live generation, freed on its next
+    // invocation.
+    val prefix = Derived.slot(slot, s, dir)(prefixPlan)
     prefix.as("a")
       .join(prefix.as("b"),
         col("a.g") === col("b.g") &&
@@ -2076,8 +2061,7 @@ object SimilarityQueries {
     graft.functions.IntersectCount.ensureRegistered(s)
     // fanOut: gram hashing + per-doc sort is the dominant cost and
     // would otherwise serialize inside the single-row-group scan task
-    val docs = graft.core.CkptSlots.checkpoint(
-      s.sparkContext.applicationId + ":cont_docs:" + dir)(
+    val docs = Derived.slot("cont_docs", s, dir)(
       Tables.fanOut(Tables.documents(s, dir), "doc_id")
         .withColumn("words", split(col("text"), " "))
         // sort ONCE per doc so the verify can run the native
@@ -2090,8 +2074,7 @@ object SimilarityQueries {
     val grams = docs.select(col("doc_id"), col("na"),
       explode(col("g")).as("gr"))
     val freq = grams.groupBy(col("gr")).agg(count(lit(1)).as("nf"))
-    containmentServe(
-      s.sparkContext.applicationId + ":cont_classed:" + dir, docs, freq)
+    containmentServe(s, dir, "cont_classed", docs, freq)
   }
 
   /** [[ddContainment]] served from the PERSISTED containment index
@@ -2113,9 +2096,7 @@ object SimilarityQueries {
     val docs = s.read.parquet(paths.docs)
     val freq = s.read.parquet(paths.freq)
       .groupBy(col("gr")).agg(sum(col("nf")).as("nf"))
-    containmentServe(
-      s.sparkContext.applicationId + ":cont_classed_idx:" + dir,
-      docs, freq)
+    containmentServe(s, dir, "cont_classed_idx", docs, freq)
   }
 
   /** Stages 2–5 of the containment join, shared by the scan and
@@ -2141,8 +2122,9 @@ object SimilarityQueries {
     * 89 s wall in stop-the-world GC; class pairs stay corpus-shaped.
     * Cost where no duplicates exist: one extra hash exchange of the
     * doc fingerprints (the window below) and two slim id joins. */
-  private def containmentServe(classedSlot: String, docs0: DataFrame,
-      freq: DataFrame): DataFrame = {
+  private def containmentServe(s: SparkSession, dir: String,
+      classedSlot: String, docs0: DataFrame, freq: DataFrame)
+      : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r22 session 2: the class window (min doc_id over partition-by-
     // gram-array) feeds EIGHT branches of the final plan — members
@@ -2153,9 +2135,9 @@ object SimilarityQueries {
     // shows 9 Window nodes, 0 ReusedExchange). Slot-checkpointing the
     // classed table runs that exchange+sort ONCE per invocation; every
     // branch then block-scans the materialized rows. Fresh per
-    // invocation (CkptSlots), shared by both twins via their own slot
-    // keys.
-    val classed = graft.core.CkptSlots.checkpoint(classedSlot)(
+    // invocation (a [[graft.core.Derived.slot]]), shared by both twins
+    // through their own slot names.
+    val classed = Derived.slot(classedSlot, s, dir)(
       docs0.withColumn("rep",
         min(col("doc_id")).over(Window.partitionBy(col("g")))))
     // (doc_id → rep, na): slim expansion map, one row per doc
@@ -2360,8 +2342,7 @@ object SimilarityQueries {
     import org.apache.spark.sql.expressions.Window
     val emb = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $AnnPlanes)"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":sem_emb:" + dir))
+      .transform(Derived.slot("sem_emb", s, dir))
       // consumed by moments + both prune sides
     val qv = emb.select(col("vec_id"), col("bucket"),
       posexplode(expr(
@@ -2394,8 +2375,7 @@ object SimilarityQueries {
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("bucket"))
           .orderBy(col("cosc").desc, col("vec_id"))))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":sem_rnk:" + dir))
+      .transform(Derived.slot("sem_rnk", s, dir))
       // both sides of the prune join + output
     val withE = emb.select(col("vec_id"), col("e"))
     // Rank-window prune join, BANDED on rank blocks (r17 — the 150k

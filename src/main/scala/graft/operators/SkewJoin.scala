@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Salted join for skewed keys — the manual countermeasure when
   * AQE's skew-join splitting isn't available or the skew is extreme
@@ -166,23 +166,18 @@ object SkewJoin {
     * histogram picks salt 1 and the plan is the plain broadcast join;
     * point it at a hot-keyed fact table and the same call salts
     * (SkewJoinSpec covers both decisions). */
-  /** One salt decision per (context, input): the key histogram is a
-    * property of the DATA, so re-probing on every invocation of the
-    * same registered query pays two sampling jobs for an answer that
-    * cannot change (same memoization contract as the shingle/KMeans
-    * caches; keyed by applicationId so a new context never reuses a
-    * dead decision). */
-  private val saltCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  /** One salt decision per dataset ([[graft.core.Derived.Memo]]): the
+    * key histogram is a property of the DATA, so re-probing on every
+    * invocation of the same registered query pays two sampling jobs
+    * for an answer that cannot change. */
+  private val saltDecision = Derived.Memo[Int]("j6_salt")
 
   def j6SkewSalted(s: SparkSession, dir: String): DataFrame = {
     val big = Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_quantity")
     val small = Tables.orders(s, dir)
       .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-    val salt = saltCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
-      adaptiveSalt(big, "l_orderkey"))
+    val salt = saltDecision(s, dir)(adaptiveSalt(big, "l_orderkey"))
     (if (salt <= 1) big.join(small, Seq("l_orderkey"))
      else saltedJoin(big, small, key = "l_orderkey",
        spreadCol = "l_linenumber", salt = salt))

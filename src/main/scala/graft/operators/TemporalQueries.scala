@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Temporal warehouse operators: SCD2 point-in-time dimension join,
   * sliding-window distinct cardinality, and robust (median/MAD/mode)
@@ -157,8 +157,7 @@ object TemporalQueries {
         graft.core.PortableHash.md5Hash60(col("user_id")).as("h"))
       .groupBy(col("hb"))
       .agg(KmvSketch.sketchOf(col("h")).as("sk"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":e6b_hourly:" + dir))
+      .transform(Derived.slot("e6b_hourly", s, dir))
       // feeds the scatter AND the hourly estimate
     val spine = hourly.select(col("hb").as("win"))
     val rolled = hourly

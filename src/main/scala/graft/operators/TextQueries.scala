@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Text-analysis + exact-dedup operators for the training-data
   * pipeline surface (builder brief: dedup, language-ID, quality
@@ -137,19 +137,14 @@ object TextQueries {
     * O(grams²) per doc, 11.9 s vs 0.4 s on the sf0.001 corpus. */
   val WinnowWindow = 4
 
-  /** One winnow-fp pass per (JVM, sfDir): the fingerprint table now
-    * feeds t_winnow_fp, dd_winnow_pairs AND dd_dup_spans; it is
-    * deterministic, slim (doc_id + one long), and the fp selection
-    * is the expensive map-side stage — same memoization contract as
-    * the simhash/shingle/KMeans caches (keyed by applicationId so a
-    * new context never reuses a dead plan). */
-  private val winnowFpCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** One winnow-fp pass per dataset ([[graft.core.Derived.Memo]]): the
+    * fingerprint table feeds t_winnow_fp, dd_winnow_pairs AND
+    * dd_dup_spans; it is deterministic, slim (doc_id + one long), and
+    * the fp selection is the expensive map-side stage. */
+  private val winnowFps = Derived.Memo[DataFrame]("winnow_fps")
 
   def tWinnowFp(s: SparkSession, dir: String): DataFrame =
-    winnowFpCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
-      computeWinnowFp(s, dir).localCheckpoint())
+    winnowFps(s, dir)(computeWinnowFp(s, dir).localCheckpoint())
 
   private def computeWinnowFp(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Storage-layout operators promoted into the registry (VERDICT r4/r5
   * task: "layout-pruned aggregate with a plan assert"): a
@@ -27,15 +27,15 @@ object LayoutQueries {
     s"${System.getProperty("java.io.tmpdir")}/graft_layout_$tag"
   }
 
-  /** One layout write per (app, dir): ingest writes the layout once
-    * and every query amortizes it — re-writing per call would make
-    * the bench measure the writer, not the pruned read these
-    * operators exist to demonstrate. */
-  private val written =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
+  /** One write per layout path and application
+    * ([[graft.core.Derived.Memo]], keyed by the path, which names the
+    * dataset): ingest writes the layout once and every query amortizes
+    * it — re-writing per call would make the bench measure the writer,
+    * not the pruned read these operators exist to demonstrate. */
+  private val written = Derived.Memo[Unit]("layout_written")
 
-  private def writeOnce(s: SparkSession, key: String)(w: => Unit): Unit =
-    written.getOrElseUpdate(s.sparkContext.applicationId + ":" + key, w)
+  private def writeOnce(s: SparkSession, path: String)(w: => Unit): Unit =
+    written(s, path)(w)
 
   /** Aggregate over a hive-partitioned copy: documents partitioned by
     * lang, filtered to one partition. The scan must show
