@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.apps.StreamBenchApp
+
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and emits a self-verifying artifact. The timed
   * action is a noop-format write so the FULL physical plan executes (a
@@ -113,9 +115,7 @@ object Bench {
     // broadcasts before the next query is timed. Each query line
     // carries "gcMs": driver GC time that overlapped its timed runs,
     // so collector interference is visible in the artifact instead of
-    // masquerading as a query regression. SPARK_GRAFT_BENCH_NOGC=1
-    // disables the between-query collect (diagnosis mode).
-    val doGcBetween = !sys.env.contains("SPARK_GRAFT_BENCH_NOGC")
+    // masquerading as a query regression.
     val gcBeans = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans
     def gcMillis(): Long = {
@@ -137,7 +137,7 @@ object Bench {
       }
       val gcDuring = gcMillis() - gc0
       // untimed: reclaim this query's broadcasts/classes
-      if (doGcBetween) System.gc()
+      System.gc()
       val median = secs.sorted.apply(secs.length / 2)
       val runsJson = secs.map(s => f"$s%.3f").mkString("[", ",", "]")
       println(
@@ -155,142 +155,40 @@ object Bench {
     // (VERDICT r6 task #2).
     val totalCold = results.map(_._3).sum
 
-    // Streaming-throughput metric in the same artifact (VERDICT r6
-    // task #7, promoted to a standing bench line per VERDICT r12 task
-    // #4): the StreamApp scoring graph over MemoryStream micro-batches
-    // — records/s and avg batch ms, the reference's headline
-    // instrumentation (spark_streaming_app.py:219-226). 10×5000 =
-    // 50k wire records (events has 100k rows at sf0.1) so the
-    // throughput number reflects steady-state scoring, not the first
-    // batch's plan warmup. Gated to FULL runs (ADVICE r7): a
-    // single-query subset invocation is a timing probe and must not
-    // pay — or be perturbed by — the fixed training+streaming cost.
-    // In-sweep host ruler on every gate line (VERDICT r20 task #1):
-    // `cal_host_probe` (operators/Calibration.scala) is a fixed,
-    // data-independent integer fold whose wall time tracks the host's
-    // effective speed — the r20 day's same-code 111.9→164.3 s swing
-    // and the 8000.0/8000 zero-margin stream_throughput pass were
-    // host tide, unreadable from raw rec/s alone. Each gate line now
-    // carries the SAME sweep's probe median so a reader (or the next
-    // round's judge) can normalize the rate before comparing to a
-    // floor derived on a different host day: rate × (cal_now /
-    // cal_ref) with cal_ref recorded in BENCH_NOTES.md. gate_ok
-    // itself stays on the raw floor — the driver's contract.
-    val calTag = results.find(_._1 == "cal_host_probe")
-      .map(r => s""""host_cal_sec":${f"${r._2}%.3f"},""").getOrElse("")
-    val streamLine = if (args.nonEmpty) "" else
-      try {
-        val (stats, alertRows) =
-          graft.apps.StreamBenchApp.run(spark, sfDir,
-            nBatches = 10, batchRows = 5000)
-        val b = stats.totalBatches.max(1)
-        val ms = stats.totalProcessingMs.max(1)
-        val rps = stats.totalRecords.toDouble * 1000.0 / ms
-        // self-gating line (VERDICT r13 task #7): the floor and the
-        // verdict travel with the measurement
-        val floor = graft.apps.StreamBenchApp.ThroughputFloorRecSec
-        s"""{"metric":"stream_throughput","records_per_sec":${f"$rps%.1f"},""" +
-          s""""avg_batch_ms":${f"${stats.totalProcessingMs.toDouble / b}%.1f"},""" +
-          s""""batches":${stats.totalBatches},"records":${stats.totalRecords},""" +
-          s""""fraud":${stats.totalFraud},"alerts":$alertRows,""" +
-          s""""floor_rec_per_sec":${floor.toLong},$calTag"gate_ok":${rps >= floor}}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"metric":"stream_throughput","err":${jstr(
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
-      }
+    // Gate and telemetry lines, one per metric, in this order (VERDICT
+    // r6 task #7, r12 task #4). Gated to FULL runs (ADVICE r7): a
+    // subset invocation is a timing probe and must not pay — or be
+    // perturbed by — the fixed training+streaming cost. Untimed: they
+    // run after all timed medians are recorded.
+    //
+    // In-sweep host ruler on every streaming gate line (VERDICT r20
+    // task #1): `cal_host_probe` (operators/Calibration.scala) is a
+    // fixed, data-independent integer fold whose wall time tracks the
+    // host's effective speed — the r20 day's same-code 111.9→164.3 s
+    // swing and the 8000.0/8000 zero-margin stream_throughput pass
+    // were host tide, unreadable from raw rec/s alone. Each gate line
+    // carries the SAME sweep's probe median so a reader can normalize
+    // the rate before comparing to a floor derived on a different host
+    // day: rate × (cal_now / cal_ref) with cal_ref recorded in
+    // BENCH_NOTES.md. gate_ok itself stays on the raw floor — the
+    // driver's contract.
+    val hostCal = results.find(_._1 == "cal_host_probe")
+      .map(r => "host_cal_sec" -> f"${r._2}%.3f")
+    def obj(fields: Seq[(String, Any)]): String =
+      fields.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
 
-    // Session-window gate (VERDICT r15 task #5): the native
-    // session_window streaming path over MemoryStream micro-batches,
-    // verified IN the bench against an independent batch lag/cumsum
-    // recompute of the same corpus (mismatches must be 0) and gated
-    // on a records/s floor — the streaming-state counterpart of the
-    // stream_throughput line. Gated to full runs for the same reason.
-    val sessionizeLine = if (args.nonEmpty) "" else
-      try {
-        val r = graft.apps.StreamBenchApp.runSessionize(spark, sfDir,
-          nBatches = 10, batchRows = 5000)
-        val floor = graft.apps.StreamBenchApp.SessionizeFloorRecSec
-        s"""{"metric":"stream_sessionize","records_per_sec":${f"${r.recordsPerSec}%.1f"},""" +
-          s""""records":${r.records},"sessions":${r.sessions},""" +
-          s""""batches":${r.batches},"mismatches":${r.mismatches},""" +
-          s""""floor_rec_per_sec":${floor.toLong},$calTag""" +
-          s""""gate_ok":${r.mismatches == 0 && r.recordsPerSec >= floor}}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"metric":"stream_sessionize","err":${jstr(
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
-      }
+    /** A streaming gate's run: its records/s, its own fields in line
+      * order, and its gate conditions besides `rate >= floor`. */
+    case class Gate(rate: Double, fields: Seq[(String, Any)],
+        ok: Boolean = true)
 
-    // Streaming-dedup gate (VERDICT r16 task #7): the watermark-
-    // bounded dropDuplicatesWithinWatermark path over MemoryStream
-    // micro-batches with planted re-deliveries, verified IN the
-    // bench against the batch distinct-key twin (mismatches must be
-    // 0, and dups_fed must be positive or the gate is vacuous) and
-    // gated on a records/s floor — same discipline as sessionize.
-    val dedupLine = if (args.nonEmpty) "" else
-      try {
-        val r = graft.apps.StreamBenchApp.runDedup(spark, sfDir,
-          nBatches = 10, batchRows = 5000)
-        val floor = graft.apps.StreamBenchApp.DedupFloorRecSec
-        s"""{"metric":"stream_dedup","records_per_sec":${f"${r.recordsPerSec}%.1f"},""" +
-          s""""records":${r.records},"uniques":${r.uniques},""" +
-          s""""dups_fed":${r.dupsFed},"batches":${r.batches},""" +
-          s""""mismatches":${r.mismatches},"floor_rec_per_sec":${floor.toLong},$calTag""" +
-          s""""gate_ok":${r.mismatches == 0 && r.dupsFed > 0 &&
-            r.recordsPerSec >= floor}}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"metric":"stream_dedup","err":${jstr(
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
-      }
-
-    // Stream-stream join gate (r18): the watermarked CASH_OUT ⋈
-    // PAYMENT laundering probe over two lockstep MemoryStreams,
-    // verified IN the bench against the batch twin of the same fed
-    // rows (mismatches must be 0, joined must be positive or the
-    // gate is vacuous) and gated on a records/s floor.
-    val joinLine = if (args.nonEmpty) "" else
-      try {
-        val r = graft.apps.StreamBenchApp.runJoin(spark, sfDir,
-          nBatches = 10, batchRows = 5000)
-        val floor = graft.apps.StreamBenchApp.JoinFloorRecSec
-        s"""{"metric":"stream_join","records_per_sec":${f"${r.recordsPerSec}%.1f"},""" +
-          s""""records":${r.records},"joined":${r.joined},""" +
-          s""""batches":${r.batches},"mismatches":${r.mismatches},""" +
-          s""""floor_rec_per_sec":${floor.toLong},$calTag""" +
-          s""""gate_ok":${r.mismatches == 0 && r.joined > 0 &&
-            r.recordsPerSec >= floor}}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"metric":"stream_join","err":${jstr(
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
-      }
-
-    // Streaming delta-ingest gate (r19, VERDICT r18 task #2): the
-    // pipe_delta_ingest decision body inside foreachBatch over a
-    // MemoryStream of delta docs — per-batch standing-index probes,
-    // cross-batch seen-digest state, per-(source, batch) admit cap —
-    // verified IN the bench against the boundary-replaying batch twin
-    // (mismatches must be 0, admits positive or the gate is vacuous)
-    // and gated on a docs/s floor. 10 batches over the sf0.1 delta
-    // split (1000 docs).
-    val ingestLine = if (args.nonEmpty) "" else
-      try {
-        val r = graft.apps.StreamBenchApp.runIngest(spark, sfDir,
-          batchRows = 100)
-        val floor = graft.apps.StreamBenchApp.IngestFloorRecSec
-        s"""{"metric":"stream_ingest","records_per_sec":${f"${r.recordsPerSec}%.1f"},""" +
-          s""""records":${r.records},"admitted":${r.admitted},""" +
-          s""""batches":${r.batches},"mismatches":${r.mismatches},""" +
-          s""""floor_rec_per_sec":${floor.toLong},$calTag""" +
-          s""""gate_ok":${r.mismatches == 0 && r.admitted > 0 &&
-            r.recordsPerSec >= floor}}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"metric":"stream_ingest","err":${jstr(
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
-      }
+    def gate(metric: String, floor: Double)(run: => Gate)
+        : (String, () => String) = metric -> { () =>
+      val g = run
+      obj(Seq("metric" -> jstr(metric), "records_per_sec" -> f"${g.rate}%.1f") ++
+        g.fields ++ Seq("floor_rec_per_sec" -> floor.toLong) ++ hostCal ++
+        Seq("gate_ok" -> (g.ok && g.rate >= floor)))
+    }
 
     // ANN index-quality telemetry (VERDICT r7 task #4): recall@10 of
     // each approximate index vs the exact brute-force top-10, so
@@ -303,9 +201,6 @@ object Bench {
     //     (AnnBenchCorpus), where real recall is achievable — THIS is
     //     the regression-gated index-quality number (spec bar:
     //     recall ≥ 0.8 at scan_frac ≤ 0.2 for the IVF path).
-    // Gated to full runs like the streaming line — a subset
-    // invocation is a timing probe. untimed: runs after all timed
-    // medians are recorded.
     // Adaptive-probe gate (VERDICT r16 task #3): alongside the
     // fixed-probe recalls (unchanged — they document the serve
     // settings), the adaptive paths widen nprobe / the Hamming
@@ -321,46 +216,110 @@ object Bench {
     // index — the flag moves that contract out of BENCH_NOTES prose
     // and into the gate output a future reader actually greps.
     def annMetrics(metric: String, dir: String,
-        iidFloor: Boolean): String =
-      try {
-        def topIds(name: String): Set[String] =
-          SparkEntry.queries(name)(spark, dir)
-            .select("vec_id").collect()
-            .map(r => String.valueOf(r.get(0))).toSet
-        val truth = topIds("sim_brute_topk")
-        def recall(ids: Set[String]): Double =
-          if (truth.isEmpty) 1.0
-          else ids.intersect(truth).size.toDouble / truth.size
-        val lsh = recall(topIds("sim_lsh_ann"))
-        val ivf = recall(topIds("sim_ivf_ann"))
-        val (lshFrac, ivfFrac) =
-          graft.operators.SimilarityQueries.annScanFractions(spark, dir)
-        val (aIvfIds, aIvfFrac, aNprobe) =
-          graft.operators.SimilarityQueries.simIvfAdaptive(spark, dir)
-        val (aLshIds, aLshFrac, aRadius) =
-          graft.operators.SimilarityQueries.simLshAdaptive(spark, dir)
-        val aIvf = recall(aIvfIds.map(String.valueOf(_)).toSet)
-        val aLsh = recall(aLshIds.map(String.valueOf(_)).toSet)
-        val target =
-          graft.operators.SimilarityQueries.AnnAdaptiveRecallTarget
-        val gateOk = aIvf >= target && aLsh >= target
-        s"""{"metric":${jstr(metric)},"k":${truth.size},""" +
-          s""""lsh_recall":${f"$lsh%.2f"},"lsh_scan_frac":${f"$lshFrac%.3f"},""" +
-          s""""ivf_recall":${f"$ivf%.2f"},"ivf_scan_frac":${f"$ivfFrac%.3f"},""" +
-          s""""ivf_adaptive_recall":${f"$aIvf%.2f"},"ivf_adaptive_frac":${f"$aIvfFrac%.3f"},"ivf_adaptive_nprobe":$aNprobe,""" +
-          s""""lsh_adaptive_recall":${f"$aLsh%.2f"},"lsh_adaptive_frac":${f"$aLshFrac%.3f"},"lsh_adaptive_radius":$aRadius,""" +
-          s""""recall_target":$target,"iid_floor":$iidFloor,""" +
-          s""""gate_ok":$gateOk}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"metric":${jstr(metric)},"err":${jstr(
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
+        iidFloor: Boolean): String = {
+      def topIds(name: String): Set[String] =
+        SparkEntry.queries(name)(spark, dir)
+          .select("vec_id").collect()
+          .map(r => String.valueOf(r.get(0))).toSet
+      val truth = topIds("sim_brute_topk")
+      def recall(ids: Set[String]): Double =
+        if (truth.isEmpty) 1.0
+        else ids.intersect(truth).size.toDouble / truth.size
+      val lsh = recall(topIds("sim_lsh_ann"))
+      val ivf = recall(topIds("sim_ivf_ann"))
+      val (lshFrac, ivfFrac) =
+        graft.operators.SimilarityQueries.annScanFractions(spark, dir)
+      val (aIvfIds, aIvfFrac, aNprobe) =
+        graft.operators.SimilarityQueries.simIvfAdaptive(spark, dir)
+      val (aLshIds, aLshFrac, aRadius) =
+        graft.operators.SimilarityQueries.simLshAdaptive(spark, dir)
+      val aIvf = recall(aIvfIds.map(String.valueOf(_)).toSet)
+      val aLsh = recall(aLshIds.map(String.valueOf(_)).toSet)
+      val target =
+        graft.operators.SimilarityQueries.AnnAdaptiveRecallTarget
+      val gateOk = aIvf >= target && aLsh >= target
+      s"""{"metric":${jstr(metric)},"k":${truth.size},""" +
+        s""""lsh_recall":${f"$lsh%.2f"},"lsh_scan_frac":${f"$lshFrac%.3f"},""" +
+        s""""ivf_recall":${f"$ivf%.2f"},"ivf_scan_frac":${f"$ivfFrac%.3f"},""" +
+        s""""ivf_adaptive_recall":${f"$aIvf%.2f"},"ivf_adaptive_frac":${f"$aIvfFrac%.3f"},"ivf_adaptive_nprobe":$aNprobe,""" +
+        s""""lsh_adaptive_recall":${f"$aLsh%.2f"},"lsh_adaptive_frac":${f"$aLshFrac%.3f"},"lsh_adaptive_radius":$aRadius,""" +
+        s""""recall_target":$target,"iid_floor":$iidFloor,""" +
+        s""""gate_ok":$gateOk}"""
+    }
+
+    // Streaming gates over MemoryStream micro-batches, each verified
+    // IN the bench against an independent batch twin (mismatches must
+    // be 0; a positive count where noted, or the gate is vacuous) and
+    // self-gating on a records/s floor (VERDICT r13 task #7):
+    //   - stream_throughput (VERDICT r6 #7, r12 #4): the StreamApp
+    //     scoring graph, the reference's headline instrumentation
+    //     (spark_streaming_app.py:219-226). 10×5000 = 50k wire records
+    //     (events has 100k rows at sf0.1), so the rate reflects
+    //     steady-state scoring, not the first batch's plan warmup;
+    //   - stream_sessionize (VERDICT r15 #5): native session_window vs
+    //     a batch lag/cumsum recompute;
+    //   - stream_dedup (VERDICT r16 #7): dropDuplicatesWithinWatermark
+    //     with planted re-deliveries (dups_fed > 0) vs the batch
+    //     distinct-key twin;
+    //   - stream_join (r18): the watermarked CASH_OUT ⋈ PAYMENT
+    //     laundering probe over two lockstep streams (joined > 0);
+    //   - stream_ingest (r19, VERDICT r18 #2): the pipe_delta_ingest
+    //     decision body in foreachBatch over the sf0.1 delta split
+    //     (1000 docs), vs the boundary-replaying batch twin
+    //     (admitted > 0).
+    val lines: Seq[(String, () => String)] = Seq(
+      gate("stream_throughput", StreamBenchApp.ThroughputFloorRecSec) {
+        val (stats, alertRows) =
+          StreamBenchApp.run(spark, sfDir, nBatches = 10, batchRows = 5000)
+        val b = stats.totalBatches.max(1)
+        val ms = stats.totalProcessingMs.max(1)
+        Gate(stats.totalRecords.toDouble * 1000.0 / ms, Seq(
+          "avg_batch_ms" -> f"${stats.totalProcessingMs.toDouble / b}%.1f",
+          "batches" -> stats.totalBatches, "records" -> stats.totalRecords,
+          "fraud" -> stats.totalFraud, "alerts" -> alertRows))
+      },
+      gate("stream_sessionize", StreamBenchApp.SessionizeFloorRecSec) {
+        val r = StreamBenchApp.runSessionize(spark, sfDir,
+          nBatches = 10, batchRows = 5000)
+        Gate(r.recordsPerSec, Seq("records" -> r.records,
+          "sessions" -> r.sessions, "batches" -> r.batches,
+          "mismatches" -> r.mismatches), r.mismatches == 0)
+      },
+      gate("stream_dedup", StreamBenchApp.DedupFloorRecSec) {
+        val r = StreamBenchApp.runDedup(spark, sfDir,
+          nBatches = 10, batchRows = 5000)
+        Gate(r.recordsPerSec, Seq("records" -> r.records,
+          "uniques" -> r.uniques, "dups_fed" -> r.dupsFed,
+          "batches" -> r.batches, "mismatches" -> r.mismatches),
+          r.mismatches == 0 && r.dupsFed > 0)
+      },
+      gate("stream_join", StreamBenchApp.JoinFloorRecSec) {
+        val r = StreamBenchApp.runJoin(spark, sfDir,
+          nBatches = 10, batchRows = 5000)
+        Gate(r.recordsPerSec, Seq("records" -> r.records,
+          "joined" -> r.joined, "batches" -> r.batches,
+          "mismatches" -> r.mismatches), r.mismatches == 0 && r.joined > 0)
+      },
+      gate("stream_ingest", StreamBenchApp.IngestFloorRecSec) {
+        val r = StreamBenchApp.runIngest(spark, sfDir, batchRows = 100)
+        Gate(r.recordsPerSec, Seq("records" -> r.records,
+          "admitted" -> r.admitted, "batches" -> r.batches,
+          "mismatches" -> r.mismatches),
+          r.mismatches == 0 && r.admitted > 0)
+      },
+      "ann_recall" -> (() => annMetrics("ann_recall", sfDir,
+        iidFloor = true)),
+      "ann_recall_structured" -> (() => annMetrics("ann_recall_structured",
+        graft.operators.AnnBenchCorpus.ensure(spark), iidFloor = false)))
+    val telemetry: Seq[(String, String)] =
+      if (args.nonEmpty) Nil
+      else lines.map { case (metric, line) =>
+        metric -> (try line() catch {
+          case e: Throwable => obj(Seq("metric" -> jstr(metric),
+            "err" -> jstr(s"${e.getClass.getSimpleName}: " +
+              String.valueOf(e.getMessage).take(200))))
+        })
       }
-    val annLine = if (args.nonEmpty) "" else
-      annMetrics("ann_recall", sfDir, iidFloor = true)
-    val annStructuredLine = if (args.nonEmpty) "" else
-      annMetrics("ann_recall_structured",
-        graft.operators.AnnBenchCorpus.ensure(spark), iidFloor = false)
     spark.stop()
 
     // Standalone per-query artifact (VERDICT r12 task #3): the
@@ -379,16 +338,6 @@ object Bench {
       val qLines = results.map { case (k, med, cold, qErr, gcMs) =>
         s"""    ${jstr(k)}: {"sec":${f"$med%.3f"},"cold":${f"$cold%.3f"},"gcMs":$gcMs,"err":${qErr.map(jstr).getOrElse("null")}}"""
       }
-      val telemetry = Seq(
-        if (streamLine.nonEmpty) Some(s"""  "stream_throughput": $streamLine""") else None,
-        if (sessionizeLine.nonEmpty) Some(s"""  "stream_sessionize": $sessionizeLine""") else None,
-        if (dedupLine.nonEmpty) Some(s"""  "stream_dedup": $dedupLine""") else None,
-        if (joinLine.nonEmpty) Some(s"""  "stream_join": $joinLine""") else None,
-        if (ingestLine.nonEmpty) Some(s"""  "stream_ingest": $ingestLine""") else None,
-        if (annLine.nonEmpty) Some(s"""  "ann_recall": $annLine""") else None,
-        if (annStructuredLine.nonEmpty)
-          Some(s"""  "ann_recall_structured": $annStructuredLine""") else None
-      ).flatten
       val doc = (Seq(
         "{",
         s"""  "sf": ${jstr(sfDir)},""",
@@ -398,7 +347,7 @@ object Bench {
         s"""  "failed": $failed,""",
         s"""  "total_sec": ${f"$total%.3f"},""",
         s"""  "total_cold_sec": ${f"$totalCold%.3f"},""") ++
-        telemetry.map(_ + ",") ++
+        telemetry.map { case (metric, line) => s"  ${jstr(metric)}: $line," } ++
         Seq("""  "queries": {""") ++
         Seq(qLines.mkString(",\n")) ++
         Seq("  }", "}")).mkString("\n")
@@ -422,13 +371,7 @@ object Bench {
     // driver keeps the TAIL of stdout, so anything printed before the
     // full-map line is the first to be truncated away — r12's
     // streaming/ANN lines were lost exactly this way.
-    if (streamLine.nonEmpty) println(streamLine)
-    if (sessionizeLine.nonEmpty) println(sessionizeLine)
-    if (dedupLine.nonEmpty) println(dedupLine)
-    if (joinLine.nonEmpty) println(joinLine)
-    if (ingestLine.nonEmpty) println(ingestLine)
-    if (annLine.nonEmpty) println(annLine)
-    if (annStructuredLine.nonEmpty) println(annStructuredLine)
+    telemetry.foreach { case (_, line) => println(line) }
     // Cold-total summary (sum of first runs): short, second-to-last.
     println(
       s"""{"metric":"total_cold","value":${f"$totalCold%.3f"},"unit":"sec","sf":${jstr(sfDir)},"n_queries":${results.size}}""")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.GraftFunctions
 import graft.ml.MlQueries
 import graft.operators.{AsofJoin, BloomJoin, DedupCluster, ExtendedQueries, GraphQueries, MergeOps, MultimodalQueries, OlapQueries, PipelineQueries, RelationalQueries, RetrievalQueries, SimilarityQueries, SketchQueries, SkewJoin, TemporalQueries, TextQueries}
 import graft.sources.LayoutQueries
@@ -20,8 +21,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first adds graft's Catalyst functions to the session it is handed:
+    * this is where an outside harness's session, built without
+    * `Sessions.builder`, enters graft. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = (
     RelationalQueries.queries ++
       TextQueries.queries ++
       SimilarityQueries.queries ++
@@ -41,6 +45,11 @@ object SparkEntry {
       LayoutQueries.queries ++
       PipelineQueries.queries ++
       graft.operators.Calibration.queries
+  ).map { case (name, f) =>
+    name -> { (s: SparkSession, d: String) =>
+      GraftFunctions.ensureRegistered(s); f(s, d)
+    }
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

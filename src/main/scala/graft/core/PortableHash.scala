@@ -20,10 +20,11 @@ object PortableHash {
 
   /** Hash of the value's canonical string form (cast to string
     * first so int/bigint keys agree with the oracle's ::VARCHAR).
-    * Resolves to the native graft.functions.Md5Hash60 expression —
-    * callers must have graft functions registered (queries call
-    * `GraftFunctions.ensureRegistered(s)`; [[md5Hash60Composed]] is
-    * the builtin-only reference form it is tested equal to). */
+    * Resolves to the native graft.functions.Md5Hash60 expression, so
+    * the session must have graft's functions: every `Sessions.builder`
+    * session has them, and `SparkEntry.queries` adds them to a session
+    * an outside harness hands in ([[md5Hash60Composed]] is the
+    * builtin-only reference form it is tested equal to). */
   def md5Hash60(c: Column): Column =
     call_function("md5_hash60", c.cast("string"))
 

@@ -1,33 +1,38 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftSqlShims, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Single registration point for all graft Catalyst functions —
-  * `.withExtensions(GraftFunctions.register)` on a builder, or
-  * `GraftFunctions.ensureRegistered(spark)` on a session the harness
-  * built without extensions. */
+/** The one owner of graft's Catalyst function registration: [[all]]
+  * lists every function's descriptor. `Sessions.builder` injects the
+  * list with `.withExtensions(GraftFunctions.register)`, and
+  * `SparkEntry.queries` calls [[ensureRegistered]] on each session an
+  * outside harness hands in. A new function goes into [[all]] and
+  * nowhere else; query bodies never register anything. */
 object GraftFunctions {
-  def register(ext: SparkSessionExtensions): Unit = {
-    CosineSimilarity.register(ext)
-    MinhashSig.register(ext)
-    Md5Hash60.register(ext)
-    Simhash32.register(ext)
-    JaccardSim.register(ext)
-    SignLshBucket.register(ext)
-    WinnowFps.register(ext)
-    GramHashes.register(ext)
-    IntersectCount.register(ext)
-  }
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
 
+  val all: Seq[Descriptor] = Seq(
+    CosineSimilarity.descriptor,
+    MinhashSig.descriptor,
+    Md5Hash60.descriptor,
+    Simhash32.descriptor,
+    JaccardSim.descriptor,
+    SignLshBucket.descriptor,
+    WinnowFps.descriptor,
+    GramHashes.descriptor,
+    IntersectCount.descriptor)
+
+  def register(ext: SparkSessionExtensions): Unit =
+    all.foreach(ext.injectFunction)
+
+  /** Registers each function `spark` does not resolve yet. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    CosineSimilarity.ensureRegistered(spark)
-    MinhashSig.ensureRegistered(spark)
-    Md5Hash60.ensureRegistered(spark)
-    Simhash32.ensureRegistered(spark)
-    JaccardSim.ensureRegistered(spark)
-    SignLshBucket.ensureRegistered(spark)
-    WinnowFps.ensureRegistered(spark)
-    GramHashes.ensureRegistered(spark)
-    IntersectCount.ensureRegistered(spark)
+    val registry = GraftSqlShims.functionRegistry(spark)
+    for ((ident, info, builder) <- all
+         if registry.lookupFunctionBuilder(ident).isEmpty)
+      registry.registerFunction(ident, info, builder)
   }
 }

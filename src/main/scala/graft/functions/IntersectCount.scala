@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native intersection COUNT over two SORTED element-distinct long
   * arrays — a single sorted-merge pass, zero allocation.
@@ -86,27 +85,12 @@ object IntersectCount {
     c
   }
 
-  val ident: FunctionIdentifier = FunctionIdentifier("intersect_count")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[IntersectCount].getName, "intersect_count")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2,
-      s"intersect_count expects 2 arguments, got ${exprs.length}")
-    IntersectCount(exprs.head, exprs(1))
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("intersect_count"),
+    new ExpressionInfo(classOf[IntersectCount].getName, "intersect_count"),
+    { exprs =>
+      require(exprs.length == 2,
+        s"intersect_count expects 2 arguments, got ${exprs.length}")
+      IntersectCount(exprs.head, exprs(1))
+    })
 }

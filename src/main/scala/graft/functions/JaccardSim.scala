@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Jaccard similarity over two DISTINCT long arrays (hashed
   * shingle sets).
@@ -120,27 +119,12 @@ object JaccardSim {
     inter.toDouble / (na + nb - inter)
   }
 
-  val ident: FunctionIdentifier = FunctionIdentifier("jaccard_sim")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[JaccardSim].getName, "jaccard_sim")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2,
-      s"jaccard_sim expects 2 arguments, got ${exprs.length}")
-    JaccardSim(exprs.head, exprs(1))
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("jaccard_sim"),
+    new ExpressionInfo(classOf[JaccardSim].getName, "jaccard_sim"),
+    { exprs =>
+      require(exprs.length == 2,
+        s"jaccard_sim expects 2 arguments, got ${exprs.length}")
+      JaccardSim(exprs.head, exprs(1))
+    })
 }

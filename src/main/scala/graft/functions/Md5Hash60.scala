@@ -3,11 +3,10 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native form of the engine-portable 60-bit hash
@@ -78,27 +77,12 @@ object Md5Hash60 {
     v >>> 4
   }
 
-  val ident: FunctionIdentifier = FunctionIdentifier("md5_hash60")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[Md5Hash60].getName, "md5_hash60")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1,
-      s"md5_hash60 expects 1 argument, got ${exprs.length}")
-    Md5Hash60(exprs.head)
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("md5_hash60"),
+    new ExpressionInfo(classOf[Md5Hash60].getName, "md5_hash60"),
+    { exprs =>
+      require(exprs.length == 1,
+        s"md5_hash60 expects 1 argument, got ${exprs.length}")
+      Md5Hash60(exprs.head)
+    })
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen'd MinHash signature over pre-hashed shingles.
   *
@@ -112,34 +111,17 @@ case class MinhashSig(child: Expression, nHashes: Int)
 }
 
 object MinhashSig {
-  val ident: FunctionIdentifier = FunctionIdentifier("minhash_sig")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[MinhashSig].getName, "minhash_sig")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2,
-      s"minhash_sig expects 2 arguments, got ${exprs.length}")
-    val n = exprs(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"minhash_sig: n must be an int literal, got $other")
-    }
-    MinhashSig(exprs.head, n)
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  /** Idempotent registration into any session (harness sessions built
-    * without `.withExtensions`). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("minhash_sig"),
+    new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
+    { exprs =>
+      require(exprs.length == 2,
+        s"minhash_sig expects 2 arguments, got ${exprs.length}")
+      val n = exprs(1) match {
+        case Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"minhash_sig: n must be an int literal, got $other")
+      }
+      MinhashSig(exprs.head, n)
+    })
 }

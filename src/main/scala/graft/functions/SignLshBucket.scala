@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen'd sign-LSH bucket: `signlsh_bucket(e, planes)`
   * projects a double vector onto `planes` deterministic pseudo-random
@@ -133,27 +132,12 @@ case class SignLshBucket(left: Expression, right: Expression)
 }
 
 object SignLshBucket {
-  val ident: FunctionIdentifier = FunctionIdentifier("signlsh_bucket")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[SignLshBucket].getName, "signlsh_bucket")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2,
-      s"signlsh_bucket expects 2 arguments, got ${exprs.length}")
-    SignLshBucket(exprs.head, exprs(1))
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("signlsh_bucket"),
+    new ExpressionInfo(classOf[SignLshBucket].getName, "signlsh_bucket"),
+    { exprs =>
+      require(exprs.length == 2,
+        s"signlsh_bucket expects 2 arguments, got ${exprs.length}")
+      SignLshBucket(exprs.head, exprs(1))
+    })
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native 32-bit SimHash over pre-hashed shingles: per bit b, a ±1
   * majority vote of `(h >> b) & 1` across the array, packed to one
@@ -94,27 +93,12 @@ case class Simhash32(child: Expression) extends UnaryExpression {
 }
 
 object Simhash32 {
-  val ident: FunctionIdentifier = FunctionIdentifier("simhash32")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[Simhash32].getName, "simhash32")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1,
-      s"simhash32 expects 1 argument, got ${exprs.length}")
-    Simhash32(exprs.head)
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("simhash32"),
+    new ExpressionInfo(classOf[Simhash32].getName, "simhash32"),
+    { exprs =>
+      require(exprs.length == 1,
+        s"simhash32 expects 1 argument, got ${exprs.length}")
+      Simhash32(exprs.head)
+    })
 }

@@ -3,12 +3,11 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native fused winnowing-fingerprint selection.
@@ -116,29 +115,14 @@ case class GramHashes(child: Expression) extends UnaryExpression {
 }
 
 object GramHashes {
-  val ident: FunctionIdentifier = FunctionIdentifier("gram_hashes")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[GramHashes].getName, "gram_hashes")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1,
-      s"gram_hashes expects 1 argument, got ${exprs.length}")
-    GramHashes(exprs.head)
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("gram_hashes"),
+    new ExpressionInfo(classOf[GramHashes].getName, "gram_hashes"),
+    { exprs =>
+      require(exprs.length == 1,
+        s"gram_hashes expects 1 argument, got ${exprs.length}")
+      GramHashes(exprs.head)
+    })
 }
 
 object WinnowFps {
@@ -194,32 +178,17 @@ object WinnowFps {
     UnsafeArrayData.fromPrimitiveArray(out.result())
   }
 
-  val ident: FunctionIdentifier = FunctionIdentifier("winnow_fps")
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[WinnowFps].getName, "winnow_fps")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2,
-      s"winnow_fps expects 2 arguments, got ${exprs.length}")
-    val w = exprs(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"winnow_fps: w must be an int literal, got $other")
-    }
-    WinnowFps(exprs.head, w)
-  }
-
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
-  }
+  val descriptor: GraftFunctions.Descriptor = (
+    FunctionIdentifier("winnow_fps"),
+    new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
+    { exprs =>
+      require(exprs.length == 2,
+        s"winnow_fps expects 2 arguments, got ${exprs.length}")
+      val w = exprs(1) match {
+        case Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"winnow_fps: w must be an int literal, got $other")
+      }
+      WinnowFps(exprs.head, w)
+    })
 }

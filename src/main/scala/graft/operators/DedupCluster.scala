@@ -200,7 +200,6 @@ object DedupCluster {
     * persisted shingle fingerprint store. */
   private def verifiedEdges(s: SparkSession, shinglesPath: String,
       cand: DataFrame): DataFrame = {
-    graft.functions.JaccardSim.ensureRegistered(s)
     val fp = s.read.parquet(shinglesPath)
     cand
       .join(fp.select(col("doc_id").as("id_a"), col("hs").as("hs_a")),

@@ -200,7 +200,6 @@ object ScaleRehearsal {
       // on, to report what the cap DROPPED (pairs an uncapped join
       // would have expanded)
       val rows = 32 / 4
-      graft.functions.MinhashSig.ensureRegistered(spark)
       val banded = docs
         .withColumn("sig",
           call_function("minhash_sig", col("hs"), lit(32)))

@@ -127,7 +127,6 @@ object SimilarityQueries {
       docs: DataFrame, nHashes: Int, bands: Int, maxBucket: Int,
       starHotBuckets: Boolean, slot: Option[String] = None)
       : DataFrame = {
-    graft.functions.MinhashSig.ensureRegistered(s)
     val rows = nHashes / bands
     val ckpt: DataFrame => DataFrame = slot match {
       // per-invocation callers (ddMinhashLsh) name a slot so the
@@ -173,7 +172,6 @@ object SimilarityQueries {
     * graft.functions.JaccardSim). */
   private[operators] def jaccardPairs(docs: DataFrame,
       cand: DataFrame): DataFrame = {
-    graft.functions.JaccardSim.ensureRegistered(docs.sparkSession)
     cand
       .join(docs.select(col("doc_id").as("id_a"), col("hs").as("hs_a")),
         "id_a")
@@ -223,7 +221,6 @@ object SimilarityQueries {
     * this split is the difference between re-shingling the corpus
     * per dedup run and probing fingerprints maintained on ingest. */
   def ddMinhashIndexed(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaccardSim.ensureRegistered(s)
     val paths = graft.sources.IndexStore.ensureMinhash(s, dir)
     val maxBucket = 50
     val banded = s.read.parquet(paths.bands)
@@ -266,7 +263,6 @@ object SimilarityQueries {
     simhashes(s, dir)(computeSimhash(s, dir).localCheckpoint())
 
   private def computeSimhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .withColumn("words", split(col("text"), " "))
       .select(col("doc_id"),
@@ -422,7 +418,6 @@ object SimilarityQueries {
     * n-gram — an equi-join, not a cartesian, with the same hot-bucket
     * cap as MinHash LSH. Top-20 most similar pairs. */
   def ddNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaccardSim.ensureRegistered(s)
     val maxBucket = 50
     val docs = Tables.documents(s, dir)
       .withColumn("words", split(col("text"), " "))
@@ -471,7 +466,6 @@ object SimilarityQueries {
     * row, so the "brute force" is a broadcast nested-loop over the
     * collection — scans the table once, no shuffle. */
   def simBruteTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))
@@ -514,7 +508,6 @@ object SimilarityQueries {
     * CTEs — the g5b loop-unroll discipline — so pool membership,
     * every penalty, and every argmax hash-verify in one compare. */
   def simMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))
@@ -584,7 +577,6 @@ object SimilarityQueries {
     * to the probed cells, the query vector a 1-row broadcast fetched
     * from the index — the base embeddings table absent. */
   private[graft] def mmrIvfPool(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val (assigned, probes, query) = ivfTopology(s, dir)
     val spark = s
     import spark.implicits._
@@ -666,8 +658,6 @@ object SimilarityQueries {
     * collection vector lives in exactly one bucket so probes can't
     * duplicate candidates. */
   def simLshAnn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
-    graft.functions.SignLshBucket.ensureRegistered(s)
     val planes = AnnPlanes
     // signature bit p = sign(sum_i e[i] * plane(p, i)); plane(p,i) is
     // ±1 from a hash of (p, i) — deterministic, no stored model. The
@@ -750,7 +740,6 @@ object SimilarityQueries {
     * vec_id), and the final rescore reuses the brute-force cosine
     * both engines already agree on (sim_brute_topk). */
   def simQuantizeTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))
@@ -852,7 +841,6 @@ object SimilarityQueries {
     * the theoretical floor; the planted-structure specs, not this
     * corpus, pin the indexes' ability to find true neighbors). */
   def annScanFractions(s: SparkSession, dir: String): (Double, Double) = {
-    graft.functions.SignLshBucket.ensureRegistered(s)
     val planes = AnnPlanes
     val emb = cleanEmbeddings(s, dir)
       .select(col("vec_id"), col("e"))
@@ -888,7 +876,6 @@ object SimilarityQueries {
     * over EVERY row — the top-k queries only witness winners'
     * buckets (VERDICT r7 task #6). */
   def ddEmbedCensus(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SignLshBucket.ensureRegistered(s)
     cleanEmbeddings(s, dir)
       .select(col("e"))
       .withColumn("bucket", expr(s"signlsh_bucket(e, $NearDupPlanes)"))
@@ -899,8 +886,6 @@ object SimilarityQueries {
   /** Embedding-cosine near-dup: all-pairs via sign-LSH buckets (same
     * signature → candidate), top-20 most similar pairs. */
   def ddEmbedNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
-    graft.functions.SignLshBucket.ensureRegistered(s)
     val planes = NearDupPlanes
     val emb = cleanEmbeddings(s, dir)
       .select(col("vec_id"), col("e"))
@@ -1009,7 +994,6 @@ object SimilarityQueries {
 
   private def ivfAdaptiveWalk(s: SparkSession, dir: String)
       : (DataFrame, Seq[Long], Double, Int) = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val paths = graft.sources.IndexStore.ensureIvf(s, dir)
     val (assigned, order, query) = ivfCellOrder(s, dir)
     val qe = {
@@ -1080,8 +1064,6 @@ object SimilarityQueries {
 
   private def lshAdaptiveWalk(s: SparkSession, dir: String)
       : (DataFrame, Seq[Long], Double, Int) = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
-    graft.functions.SignLshBucket.ensureRegistered(s)
     val planes = AnnPlanes
     val emb = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $planes)"))
@@ -1177,7 +1159,6 @@ object SimilarityQueries {
     }
 
   def simIvfAnn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val paths = graft.sources.IndexStore.ensureIvf(s, dir)
     val (assigned, probes, query) = ivfTopology(s, dir)
     dynamicOracle(("sim_ivf_ann", dir)) =
@@ -1238,7 +1219,6 @@ object SimilarityQueries {
     * (cosine DESC, vec_id) total-ordered k-cut all verify in one
     * compare. */
   def simIvfBatch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val paths = graft.sources.IndexStore.ensureIvf(s, dir)
     val assigned = s.read.parquet(paths.assignments)
     // the batch: vectors 0..BatchQueries-1, fetched from the index
@@ -1371,7 +1351,6 @@ object SimilarityQueries {
     * exact, the cuts are total-ordered — so cell prune + SQ8 cut +
     * rescore all verify in one compare. */
   def simIvfSq8(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val paths = graft.sources.IndexStore.ensureIvf(s, dir)
     val (assigned, probes, query) = ivfTopology(s, dir)
     dynamicOracle(("sim_ivf_sq8", dir)) =
@@ -1504,7 +1483,6 @@ object SimilarityQueries {
     * prune, code content (base AND incrementally-appended delta),
     * ADC arithmetic, and the refine all verify in one compare. */
   def simIvfPq(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val ivf = graft.sources.IndexStore.ensureIvf(s, dir)
     val pq = graft.sources.IndexStore.ensurePq(s, dir)
     val (assigned, probes, query) = ivfTopology(s, dir)
@@ -1693,7 +1671,6 @@ object SimilarityQueries {
     * by [[ExactPairsMaxRows]]: throws rather than going quietly
     * quadratic (VERDICT r4/r5 weak-list item). */
   def simExactPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .transform(Derived.slot("exact_pairs", s, dir))
@@ -1970,7 +1947,6 @@ object SimilarityQueries {
     * .TopKPerGroup]] — partial heaps map-side, k rows per anchor in
     * the exchange, no global sort, no candidate materialization. */
   def simNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"))
     val anchors = emb.filter(col("vec_id") < NegAnchors)
@@ -2058,7 +2034,6 @@ object SimilarityQueries {
     * boilerplate. Shuffles carry hashes and ids only; full gram
     * arrays travel once, to decorate the verify join. */
   def ddContainment(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.IntersectCount.ensureRegistered(s)
     // fanOut: gram hashing + per-doc sort is the dominant cost and
     // would otherwise serialize inside the single-row-group scan task
     val docs = Derived.slot("cont_docs", s, dir)(
@@ -2091,7 +2066,6 @@ object SimilarityQueries {
     * so the incremental build is lossless by additivity. Shares the
     * scan twin's all-pairs oracle. */
   def ddContainmentIndexed(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.IntersectCount.ensureRegistered(s)
     val paths = graft.sources.IndexStore.ensureContainment(s, dir)
     val docs = s.read.parquet(paths.docs)
     val freq = s.read.parquet(paths.freq)
@@ -2337,8 +2311,6 @@ object SimilarityQueries {
     * at fixture scale. */
   private[graft] def ddSemanticWindowed(
       s: SparkSession, dir: String, window: Int): DataFrame = {
-    graft.functions.SignLshBucket.ensureRegistered(s)
-    graft.functions.CosineSimilarity.ensureRegistered(s)
     import org.apache.spark.sql.expressions.Window
     val emb = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $AnnPlanes)"))
@@ -2428,7 +2400,6 @@ object SimilarityQueries {
     * [[ddSemanticWindowed]] for the cap-binding spec case. */
   private[graft] def ddSemanticCapstatsWindowed(
       s: SparkSession, dir: String, window: Int): DataFrame = {
-    graft.functions.SignLshBucket.ensureRegistered(s)
     val w = window.toLong
     val census = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $AnnPlanes)"))

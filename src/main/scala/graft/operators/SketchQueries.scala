@@ -44,7 +44,6 @@ object SketchQueries {
   /** The CMS table for the corpus token stream: (j, bucket, c),
     * D×W rows. */
   def cmsTable(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     // Aggregate BEFORE hashing (r22, guide §2.3): counter addition is
     // commutative, so the cell count is the sum of each word's total
     // count over the words hashing there — count tokens per WORD
@@ -70,7 +69,6 @@ object SketchQueries {
   /** Point estimates for the probe words: min over the D cells each
     * word hashes to. The sketch side is D×W rows — broadcast. */
   def d4CmsEstimate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     import s.implicits._
     val sketch = cmsTable(s, dir)
     val probes = Probes.toDF("word")
@@ -99,7 +97,6 @@ object SketchQueries {
   val KmvQtySplit = 25
 
   def d5KmvSetops(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     import graft.functions.KmvSketch
     val bits = PortableHash.Bits
     val sides = Tables.lineitem(s, dir)

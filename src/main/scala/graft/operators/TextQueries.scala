@@ -147,7 +147,6 @@ object TextQueries {
     winnowFps(s, dir)(computeWinnowFp(s, dir).localCheckpoint())
 
   private def computeWinnowFp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     // Native fused selection (graft.functions.WinnowFps) — one
     // codegen'd loop replacing the three-stage interpreted HOF chain
     // kept below in [[winnowFpHof]] for the bit-equality spec.
@@ -575,7 +574,6 @@ object TextQueries {
     * mixing decision is a map-side filter on a hash of the row's own
     * key — zero shuffle until the small per-source census. */
   def l6SourceMix(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .withColumn("tier", expr("CAST(substring(source, 4) AS INT) % 3"))
       .withColumn("h",
@@ -608,7 +606,6 @@ object TextQueries {
     * formulation sorts the entire corpus per domain; the oracle
     * deliberately uses it — hash equality pins the reformulation). */
   def l13DomainQuota(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         graft.core.PortableHash.md5Hash60(col("doc_id")).as("h"))
@@ -624,7 +621,6 @@ object TextQueries {
     * leak-free across pipeline reruns (same contract as
     * [[l6SourceMix]]). Emits the per-split census. */
   def l7HashSplit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .withColumn("h",
         graft.core.PortableHash.md5Hash60(col("doc_id")) % 100L)
@@ -762,7 +758,6 @@ object TextQueries {
     * (pair, diagonal) — thousands of small partitions, no global
     * sort. */
   def ddDupSpans(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val pairs = ddWinnowPairs(s, dir).select("id_a", "id_b")
     // NOT a semi-join pre-filter: restricting the gram explode to
     // pair-participating docs was tried in r21 and MEASURED SLOWER at

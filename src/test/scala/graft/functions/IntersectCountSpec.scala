@@ -7,7 +7,6 @@ import graft.SparkSpec
 class IntersectCountSpec extends SparkSpec {
 
   test("equals size(array_intersect) on real sorted gram sets") {
-    IntersectCount.ensureRegistered(spark)
     val docs = graft.core.Tables.documents(spark, sfDir)
       .withColumn("words", split(col("text"), " "))
       .selectExpr("doc_id",
@@ -26,7 +25,6 @@ class IntersectCountSpec extends SparkSpec {
   }
 
   test("edge cases: identical, disjoint, empty, null, codegen span") {
-    IntersectCount.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT
         | intersect_count(array(1L,2L,3L), array(1L,2L,3L)) AS same,

@@ -7,7 +7,6 @@ import graft.SparkSpec
 class JaccardSimSpec extends SparkSpec {
 
   test("bit-equal to the composed intersect/union spelling on real shingles") {
-    graft.functions.JaccardSim.ensureRegistered(spark)
     // all small-bucket pairs of the real corpus — the exact input
     // shape the dd_* oracled entries feed it
     val docs = graft.core.Tables.documents(spark, sfDir)
@@ -35,7 +34,6 @@ class JaccardSimSpec extends SparkSpec {
   }
 
   test("edge cases: identical, disjoint, one-side empty, both empty, null") {
-    graft.functions.JaccardSim.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT
         | jaccard_sim(array(1L,2L,3L), array(1L,2L,3L)) AS same,
@@ -61,7 +59,6 @@ class JaccardSimSpec extends SparkSpec {
   }
 
   test("large-array path grows the probe table and stays correct") {
-    graft.functions.JaccardSim.ensureRegistered(spark)
     import spark.implicits._
     // 3000 elements overlapping in 1500 — forces table growth past
     // the 1024 initial capacity

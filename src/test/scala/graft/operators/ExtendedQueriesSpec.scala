@@ -352,7 +352,6 @@ class ExtendedQueriesSpec extends SparkSpec {
       "sample") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val sample = Tables.orders(spark, sfDir)
       .filter(graft.core.PortableHash.md5Hash60(col("o_orderkey"))
         % ExtendedQueries.SampleMod === 0L)

@@ -412,7 +412,6 @@ class TextQueriesSpec extends SparkSpec {
 
   test("domain quota caps every source at the quota, keeping the " +
       "lowest-hash members") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val out = TextQueries.l13DomainQuota(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     // every shipped source has ≥ quota docs, so the cap binds on all
