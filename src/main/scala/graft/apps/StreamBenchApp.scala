@@ -501,7 +501,6 @@ object StreamBenchApp {
     import graft.operators.PipelineQueries
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val M = graft.sources.IndexStore.TrgmDeltaMod
     // standing state: built once at ingest-service start, not per
     // batch — excluded from the timed window like the trained model
     // in run()
@@ -513,7 +512,7 @@ object StreamBenchApp {
     // order a replayed ingest feed arrives in — and the order that
     // makes batch-local keepers compose to the split-global one
     val wire = graft.core.Tables.documents(spark, sfDir)
-      .filter(pmod(col("doc_id"), lit(M.toLong)) === M - 1)
+      .filter(graft.sources.IndexStore.isDelta(col("doc_id")))
       .orderBy(col("doc_id"))
       .select(to_json(struct(col("doc_id"), col("source"),
         col("text"))).as("v"), col("doc_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Derived, Tables}
+import graft.sources.IndexStore
 
 /** Near-duplicate CLUSTERING for the training-data pipeline: the step
   * after pair detection — fold near-dup pairs into connected
@@ -218,10 +219,9 @@ object DedupCluster {
     * (cluster-layout bands + fingerprints). */
   private[graft] def baseClusterState(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val M = graft.sources.IndexStore.TrgmDeltaMod
-    val mh = graft.sources.IndexStore.ensureMinhash(s, dir)
+    val mh = IndexStore.ensureMinhash(s, dir)
     val cbBase = s.read.parquet(mh.cbands)
-      .filter(pmod(col("doc_id"), lit(M.toLong)) < M - 1)
+      .filter(IndexStore.isBase(col("doc_id")))
     // LAZY checkpoints (r22, same as computeClusterCc): the
     // fixpoint's first sum action materializes init → edges2 → edges
     // in one job instead of three sequential checkpoint jobs; edges'
@@ -273,17 +273,15 @@ object DedupCluster {
     * two-anchor union can only CONNECT more true near-dups, never
     * fewer. */
   def ddClusterIncremental(s: SparkSession, dir: String): DataFrame = {
-    val M = graft.sources.IndexStore.TrgmDeltaMod
-    val st = graft.sources.IndexStore.ensureBaseClusters(s, dir)
-    val mh = graft.sources.IndexStore.ensureMinhash(s, dir)
-    def isDelta(c: org.apache.spark.sql.Column) =
-      pmod(c, lit(M.toLong)) === M - 1
+    val st = IndexStore.ensureBaseClusters(s, dir)
+    val mh = IndexStore.ensureMinhash(s, dir)
     val cb = s.read.parquet(mh.cbands)
     val mergedStats = s.read.parquet(mh.cstats)
       .groupBy(col("band"), col("bhash"))
       .agg(sum(col("n")).cast("long").as("n"), min(col("rep")).as("rep"))
     val newEdges = verifiedEdges(s, mh.shingles,
-      bandedCandidates(cb, maxBucket = 50, probe = Some(isDelta),
+      bandedCandidates(cb, maxBucket = 50,
+        probe = Some(IndexStore.isDelta),
         statsOpt = Some(mergedStats)))
     val edges = s.read.parquet(st.edges)
       .unionByName(newEdges).distinct()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Derived, Tables}
+import graft.sources.IndexStore
 
 /** Iterative graph analytics beyond connected components
   * (DedupCluster): PageRank over the bipartite part↔supplier graph
@@ -150,8 +151,8 @@ object GraphQueries {
 
   /** Incremental PageRank — the index-maintenance discipline applied
     * to ITERATIVE analytics: when the delta orders (the standing
-    * l_orderkey mod [[graft.sources.IndexStore.GraphDeltaMod]]
-    * split) arrive, the merged graph's ranks are NOT recomputed from
+    * [[graft.sources.IndexStore.isDelta]] split on l_orderkey)
+    * arrive, the merged graph's ranks are NOT recomputed from
     * the uniform vector; the engine warm-starts from the PERSISTED
     * converged ranks of the base graph
     * ([[graft.sources.IndexStore.ensureBaseRanks]] — a serving view
@@ -168,7 +169,7 @@ object GraphQueries {
     * base selection), so one hash compare certifies the persisted
     * rank content AND the warm-start decision chain. */
   def g5cPagerankIncremental(s: SparkSession, dir: String): DataFrame = {
-    val ranksPath = graft.sources.IndexStore.ensureBaseRanks(s, dir)
+    val ranksPath = IndexStore.ensureBaseRanks(s, dir)
     val edges = edgesFor(s, dir)
     // same r22 shape as g5b: outdeg feeds only the warm-start init
     // (materialized once inside convergedRanks); the node count rides
@@ -187,9 +188,8 @@ object GraphQueries {
     * persists for the warm-start serve. */
   private[graft] def baseConvergedRanks(s: SparkSession,
       dir: String): DataFrame = {
-    val M = graft.sources.IndexStore.GraphDeltaMod
     val pairs = Tables.lineitem(s, dir)
-      .filter(pmod(col("l_orderkey"), lit(M.toLong)) < M - 1)
+      .filter(IndexStore.isBase(col("l_orderkey")))
       .select(col("l_partkey"), col("l_suppkey")).distinct()
     val fwd = pairs.select(
       (col("l_partkey") * 2).as("src"),
@@ -403,7 +403,7 @@ object GraphQueries {
     * (GraphIndexSpec asserts only graph_adj/graph_stats files are
     * read). */
   def g6TrianglesIndexed(s: SparkSession, dir: String): DataFrame = {
-    val gp = graft.sources.IndexStore.ensureGraphEdges(s, dir)
+    val gp = IndexStore.ensureGraphEdges(s, dir)
     s.read.parquet(gp.stats)
       .crossJoin(closureFromAdjacency(s, s.read.parquet(gp.adj)))
   }
@@ -518,7 +518,6 @@ object GraphQueries {
     * cold-start constant for delta-only nodes, exactly the engine's
     * left join. */
   private def g5cOracleSql: String = {
-    val M = graft.sources.IndexStore.GraphDeltaMod
     def chain(p: String): String = {
       val its = (1 to PrbMaxIters).map { i =>
         s"""${p}it$i AS MATERIALIZED (SELECT e.dst AS node,
@@ -551,7 +550,7 @@ object GraphQueries {
         |${p}stages AS ($allS)""".stripMargin
     }
     s"""WITH bpairs AS (SELECT DISTINCT l_partkey, l_suppkey
-       |               FROM lineitem WHERE l_orderkey % $M < ${M - 1}),
+       |               FROM lineitem WHERE ${IndexStore.isBaseSql("l_orderkey")}),
        |bedges AS MATERIALIZED (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
        |           FROM bpairs
        |           UNION ALL

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Derived, Tables}
+import graft.sources.IndexStore
 
 /** The composed corpus-construction pipeline — the end product every
   * individual dd_*, t_*, and l* operator exists to serve, run as ONE
@@ -144,8 +145,8 @@ object PipelineQueries {
 
   /** INCREMENTAL corpus ingest — the 100 TB shape of
     * [[pipeCorpusBuild]]: a delta batch of documents arrives
-    * (doc_id mod [[graft.sources.IndexStore.TrgmDeltaMod]] ==
-    * TrgmDeltaMod−1, the split every index family uses) and each doc
+    * ([[graft.sources.IndexStore.isDelta]] on doc_id, the split every
+    * index family uses) and each doc
     * gets an admit/drop DECISION against the standing corpus using
     * the PERSISTED indexes — the base corpus text is never
     * re-scanned:
@@ -199,14 +200,13 @@ object PipelineQueries {
     * and no prior-batch digest state exists (the split IS one batch). */
   private[graft] def deltaFlagged(s: SparkSession,
       dir: String): DataFrame = {
-    val M = graft.sources.IndexStore.TrgmDeltaMod
-    def isDelta(c: Column) = pmod(c, lit(M.toLong)) === M - 1
     val delta = gateProjection(
-        Tables.documents(s, dir).filter(isDelta(col("doc_id"))))
+        Tables.documents(s, dir).filter(IndexStore.isDelta(col("doc_id"))))
       .transform(Derived.slot("pipe_delta", s, dir))
       // feeds digest probe, keeper census, flags
     flaggedCore(s, dir, delta,
-      df => df.filter(isDelta(col("doc_id"))), priorDigests = None,
+      df => df.filter(IndexStore.isDelta(col("doc_id"))),
+      priorDigests = None,
       ctx = None)
   }
 
@@ -229,7 +229,7 @@ object PipelineQueries {
     * docs' MinHash shingles/bands and 13-grams are computed FROM THE
     * ARRIVING TEXT with the exact projections the index builds run
     * ([[graft.sources.IndexStore.minhashShingles]] /
-    * `clusterBandsOf` / `gram13Of` — one spelling, so probe and
+    * `bandsOf` / `gram13Of` — one spelling, so probe and
     * index can never diverge), never read back from the standing
     * indexes. A replayed already-indexed doc therefore probes with
     * byte-identical signatures to its indexed rows (what keeps the
@@ -250,13 +250,13 @@ object PipelineQueries {
     val proj =
       Derived.slot("flagbatch_proj", s, dir)(gateProjection(batchDocs))
     val sh = Derived.slot("flagbatch_sh", s, dir)(
-      graft.sources.IndexStore.minhashShingles(s, batchDocs))
+      IndexStore.minhashShingles(s, batchDocs))
       // feeds bands AND the fingerprint verify
     val batch = BatchSignatures(
-      bands = graft.sources.IndexStore.clusterBandsOf(sh),
+      bands = IndexStore.bandsOf(sh, IndexStore.MhClusterBands),
       fps = sh.select(col("doc_id"), col("hs")),
       grams = Derived.slot("flagbatch_grams", s, dir)(
-        graft.sources.IndexStore.gram13Of(batchDocs)))
+        IndexStore.gram13Of(batchDocs)))
     val ids = proj.select(col("doc_id"))
     flaggedCore(s, dir, proj,
       df => df.join(broadcast(ids), Seq("doc_id")),
@@ -302,14 +302,12 @@ object PipelineQueries {
     // ensure the probed families BEFORE reading the version: a first
     // build bumps it, and the cached generation must carry the
     // post-build version or the very next call would spuriously miss
-    val cat = graft.sources.IndexStore.ensureCatalog(s, dir)
-    val mh = graft.sources.IndexStore.ensureMinhash(s, dir)
-    val g13 = graft.sources.IndexStore.ensureGram13(s, dir)
+    val cat = IndexStore.ensureCatalog(s, dir)
+    val mh = IndexStore.ensureMinhash(s, dir)
+    val g13 = IndexStore.ensureGram13(s, dir)
     // a newer generation replaces the dead one, whose localCheckpoints
     // would otherwise stay pinned in executor storage
-    probeCtxs(s, dir, gen = graft.sources.IndexStore.indexVersion(dir)) {
-      val M = graft.sources.IndexStore.TrgmDeltaMod
-      def isDelta(c: Column) = pmod(c, lit(M.toLong)) === M - 1
+    probeCtxs(s, dir, gen = IndexStore.indexVersion(dir)) {
       val census = s.read.parquet(mh.cstats)
         .groupBy(col("band"), col("bhash"))
         .agg(sum(col("n")).cast("long").as("n"))
@@ -323,7 +321,7 @@ object PipelineQueries {
         small = census.filter(col("n") <= 50)
           .select("band", "bhash").localCheckpoint(),
         hotBaseRep = s.read.parquet(mh.cstats)
-          .filter(!isDelta(col("rep")))
+          .filter(!IndexStore.isDelta(col("rep")))
           .groupBy(col("band"), col("bhash"))
           .agg(min(col("rep")).as("b_id"))
           .join(census.filter(col("n") > 50)
@@ -353,11 +351,9 @@ object PipelineQueries {
       priorDigests: Option[DataFrame],
       ctx: Option[ProbeCtx],
       batchSide: Option[BatchSignatures] = None): DataFrame = {
-    val M = graft.sources.IndexStore.TrgmDeltaMod
-    val cat = graft.sources.IndexStore.ensureCatalog(s, dir)
-    val mh = graft.sources.IndexStore.ensureMinhash(s, dir)
-    val g13 = graft.sources.IndexStore.ensureGram13(s, dir)
-    def isDelta(c: Column) = pmod(c, lit(M.toLong)) === M - 1
+    val cat = IndexStore.ensureCatalog(s, dir)
+    val mh = IndexStore.ensureMinhash(s, dir)
+    val g13 = IndexStore.ensureGram13(s, dir)
     val delta = proj
     val baseDigests0 = ctx.fold(
       s.read.parquet(cat.digests)
@@ -398,7 +394,7 @@ object PipelineQueries {
     val smallCand = dBands
       .select(col("doc_id").as("d_id"), col("band"), col("bhash"))
       .join(small, Seq("band", "bhash"))
-      .join(bands.filter(!isDelta(col("doc_id")))
+      .join(bands.filter(!IndexStore.isDelta(col("doc_id")))
         .select(col("doc_id").as("b_id"), col("band"), col("bhash")),
         Seq("band", "bhash"))
       .select(col("d_id"), col("b_id"))
@@ -415,7 +411,7 @@ object PipelineQueries {
     // certifies it costs nothing at oracle scale.
     val hotBaseRep = ctx.fold(
       s.read.parquet(mh.cstats)
-        .filter(!isDelta(col("rep")))
+        .filter(!IndexStore.isDelta(col("rep")))
         .groupBy(col("band"), col("bhash"))
         .agg(min(col("rep")).as("b_id"))
         .join(census.filter(col("n") > 50).select("band", "bhash"),
@@ -473,7 +469,7 @@ object PipelineQueries {
     * corpus, so a hash match certifies the catalog build (base and
     * appended delta alike). */
   def pipeCatalogCensus(s: SparkSession, dir: String): DataFrame = {
-    val cat = graft.sources.IndexStore.ensureCatalog(s, dir)
+    val cat = IndexStore.ensureCatalog(s, dir)
     s.read.parquet(cat.stats)
       .groupBy(col("split"), col("source"))
       .agg(sum(col("n_docs")).cast("long").as("n_docs"))
@@ -484,19 +480,6 @@ object PipelineQueries {
     "pipe_delta_ingest" -> (pipeDeltaIngest _),
     "pipe_catalog_census" -> (pipeCatalogCensus _)
   )
-
-  /** DuckDB spellings of the engine's delta-membership predicate,
-    * interpolated from the SAME constant the engine splits on
-    * ([[graft.sources.IndexStore.TrgmDeltaMod]]) so the oracles can
-    * never silently diverge from the split. */
-  private val DeltaModSql = {
-    val m = graft.sources.IndexStore.TrgmDeltaMod
-    s"$m = ${m - 1}"
-  }
-  private val DeltaNotModSql = {
-    val m = graft.sources.IndexStore.TrgmDeltaMod
-    s"$m <> ${m - 1}"
-  }
 
   /** The full funnel in one DuckDB statement: the cluster closure
     * (DedupCluster's recursive CTE), the decontamination gram join
@@ -586,9 +569,9 @@ object PipelineQueries {
          |    AS BIGINT) AS en,
          |  ${graft.core.PortableHash.duckSql("CAST(doc_id AS VARCHAR)")}
          |    AS h
-         |  FROM documents WHERE doc_id % $DeltaModSql),
+         |  FROM documents WHERE ${IndexStore.isDeltaSql("doc_id")}),
          |bset AS (SELECT DISTINCT md5(text) AS text_md5
-         |         FROM documents WHERE doc_id % $DeltaNotModSql),
+         |         FROM documents WHERE ${IndexStore.isBaseSql("doc_id")}),
          |keep AS (SELECT text_md5, min(doc_id) AS keeper
          |         FROM dd GROUP BY text_md5),
          |gw AS (SELECT doc_id, string_split(text, ' ') AS w
@@ -599,7 +582,7 @@ object PipelineQueries {
          |           i -> array_to_string(w[i:i+2], ' '))) AS g
          |       FROM gw),
          |nd AS (SELECT DISTINCT a.doc_id FROM gs a JOIN gs b
-         |  ON a.doc_id % $DeltaModSql AND b.doc_id % $DeltaNotModSql
+         |  ON ${IndexStore.isDeltaSql("a.doc_id")} AND ${IndexStore.isBaseSql("b.doc_id")}
          |  WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
          |      / len(list_distinct(list_concat(a.g, b.g))) >= 0.85),
          |g13 AS (SELECT doc_id,
@@ -609,7 +592,7 @@ object PipelineQueries {
          |        FROM gw),
          |ev AS (SELECT DISTINCT g FROM g13 WHERE doc_id % 17 = 0),
          |cont AS (SELECT DISTINCT g13.doc_id FROM g13 JOIN ev USING (g)
-         |         WHERE g13.doc_id % 17 <> 0 AND g13.doc_id % $DeltaModSql),
+         |         WHERE g13.doc_id % 17 <> 0 AND ${IndexStore.isDeltaSql("g13.doc_id")}),
          |dec AS (SELECT d.doc_id, d.source, d.h,
          |    CASE WHEN en <= 0 THEN 'lang'
          |         WHEN NOT (n_tokens >= 20
@@ -633,7 +616,7 @@ object PipelineQueries {
          |         ELSE 'quota' END) AS decision
          |FROM dec d LEFT JOIN q ON d.doc_id = q.doc_id""".stripMargin,
     "pipe_catalog_census" ->
-      s"""SELECT CASE WHEN doc_id % $DeltaModSql THEN 'delta' ELSE 'base' END
+      s"""SELECT CASE WHEN ${IndexStore.isDeltaSql("doc_id")} THEN 'delta' ELSE 'base' END
         |    AS split,
         |  source, CAST(count(*) AS BIGINT) AS n_docs
         |FROM documents

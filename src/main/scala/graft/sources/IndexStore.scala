@@ -2,10 +2,12 @@ package graft.sources
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{PortableHash, Tables}
+import graft.functions.Md5Hash60
 
 /** Persisted secondary-index surfaces: a positional trigram postings
   * table over `documents` and an IVF (coarse-quantizer) index over
@@ -34,11 +36,11 @@ import graft.core.{PortableHash, Tables}
   *     `cell`, so probing nprobe cells is partition pruning.
   *
   * Incremental maintenance follows the m11_incr_agg discipline
-  * (MergeOps.scala): the base build covers doc_id % [[TrgmDeltaMod]]
-  * < [[TrgmDeltaMod]]-1 and the remainder arrives as an APPENDED
-  * delta — postings are fact rows (no aggregation state), so the
-  * merge is a partition-aligned append and the merged table is
-  * row-identical to a one-shot build (IndexStoreSpec pins this).
+  * (MergeOps.scala): the base build covers the [[isBase]] rows and
+  * the [[isDelta]] remainder arrives as an APPENDED delta — postings
+  * are fact rows (no aggregation state), so the merge is a
+  * partition-aligned append and the merged table is row-identical to
+  * a one-shot build (IndexStoreSpec pins this).
   *
   * Builds are memoized per (JVM, dataset) and written under a
   * PROCESS-UNIQUE root (ADVICE r13): KMeans cell ids depend on the
@@ -70,23 +72,30 @@ object IndexStore {
     * at local scale. */
   val TrgmBuckets = 64
 
-  /** Incremental-build split: doc_id % TrgmDeltaMod == TrgmDeltaMod-1
-    * rows form the appended delta (~20% of the corpus at any SF). */
-  val TrgmDeltaMod = 5
+  /** The base/delta split every index family is maintained under: a
+    * row whose key (doc_id, vec_id or l_orderkey) is DeltaMod-1 mod
+    * [[DeltaMod]] arrives in the appended delta (~20% of any table),
+    * every other row is in the base build. Engine code spells the
+    * split only as [[isBase]]/[[isDelta]], DuckDB oracles only as
+    * [[isBaseSql]]/[[isDeltaSql]]. */
+  val DeltaMod = 5
+
+  def isBase(key: Column): Column =
+    pmod(key, lit(DeltaMod.toLong)) < DeltaMod - 1
+
+  def isDelta(key: Column): Column =
+    pmod(key, lit(DeltaMod.toLong)) === DeltaMod - 1
+
+  /** DuckDB spellings over the column named `key`; keys are
+    * non-negative, where `%` agrees with `pmod`. */
+  def isBaseSql(key: String): String = s"$key % $DeltaMod < ${DeltaMod - 1}"
+
+  def isDeltaSql(key: String): String = s"$key % $DeltaMod = ${DeltaMod - 1}"
 
   /** IVF coarse-quantizer cells and probe width — same values the
     * in-memory r11 IVF used, so recall characteristics carry over. */
   val IvfK = 16
   val IvfNprobe = 2
-
-  /** Incremental-build split for the IVF index (VERDICT r13 task #6,
-    * the trigram [[TrgmDeltaMod]] discipline applied to vectors):
-    * vec_id % IvfDeltaMod == IvfDeltaMod-1 rows are NOT part of the
-    * quantizer fit — they arrive after the build and are appended via
-    * [[appendIvf]], assigned to the nearest EXISTING centroid with no
-    * re-fit, exactly how a 100 TB vector index absorbs new data
-    * between periodic re-trainings. */
-  val IvfDeltaMod = 5
 
   case class IvfPaths(centroids: String, assignments: String)
 
@@ -126,10 +135,10 @@ object IndexStore {
   def bumpVersion(dir: String): Unit =
     indexVersions.updateWith(dir)(v => Some(v.getOrElse(0L) + 1L))
 
-  /** Memoized build wrapper every ensure* body runs through: build
-    * once per (JVM, dir), and bump the dataset's index version when a
-    * build actually ran — the single choke point that keeps
-    * version-keyed derived caches honest. */
+  /** Memoized build wrapper every ensure* body runs through: each
+    * index is built once per (JVM, dir), and the dataset's index
+    * version is bumped when a build actually ran — the single choke
+    * point that keeps version-keyed derived caches honest. */
   private def built[A](cache: TrieMap[String, A], dir: String)(
       build: => A): A =
     cache.getOrElseUpdate(dir, { val a = build; bumpVersion(dir); a })
@@ -193,25 +202,36 @@ object IndexStore {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Pure-Scala twin of [[PortableHash.md5Hash60Composed]] mod
+  /** The JVM twin of [[PortableHash.md5Hash60Composed]] mod
     * [[TrgmBuckets]] — lets the lookup side compute its pattern
     * grams' partition buckets as driver-side literals without a
-    * Spark job (Md5Hash60Spec pins the Spark/Scala agreement). */
+    * Spark job (Md5Hash60Spec pins the Spark/JVM agreement). */
   def trgmBucketOf(gram: String): Int =
-    (md5Hash60Local(gram) % TrgmBuckets).toInt
+    (Md5Hash60.hash60(UTF8String.fromString(gram)) % TrgmBuckets).toInt
 
   /** Driver-side partition bucket of a query TERM in the word
     * postings layout — same portable-hash twin contract as
     * [[trgmBucketOf]]. */
   def wordBucketOf(w: String): Int =
-    (md5Hash60Local(w) % WordBuckets).toInt
+    (Md5Hash60.hash60(UTF8String.fromString(w)) % WordBuckets).toInt
 
-  private def md5Hash60Local(s: String): Long = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hex = digest.take(8).map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
+  /** The build skeleton of the document-keyed families: read the
+    * corpus once, then run the family's `write` as the base overwrite
+    * and again as the delta append — same generation, same layout;
+    * every family's rows are per-doc facts or additive partial
+    * counts, so the merge is a set union with no state to
+    * re-aggregate. The corpus is fanned out by doc_id (r21): every
+    * family runs heavy per-doc compute (shingling, gram hashing,
+    * chunking) that would otherwise serialize inside the
+    * single-row-group scan task. */
+  private def docIndex[A](cache: TrieMap[String, A], s: SparkSession,
+      dir: String, paths: A)(write: (DataFrame, String) => Unit): A =
+    built(cache, dir) {
+      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
+      write(docs.filter(isBase(col("doc_id"))), "overwrite")
+      write(docs.filter(isDelta(col("doc_id"))), "append")
+      paths
+    }
 
   /** (doc_id, gr, pos 1-based, bucket) for every length-3 gram of
     * every doc in `docs` — generated map-side, no shuffle until the
@@ -231,34 +251,19 @@ object IndexStore {
           lit(TrgmBuckets.toLong)).cast("int").as("bucket"))
 
   /** Build (base overwrite + delta append) the positional trigram
-    * postings for `dir`'s documents; returns the table path. Once
-    * per (JVM, dir). */
-  def ensureTrgmPostings(s: SparkSession, dir: String): String =
-    built(trgmBuilt, dir) {
-      val path = indexRoot(dir).resolve("trgm_postings").toString
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(d: DataFrame, mode: String): Unit =
-        trgmPostingsOf(d)
-          // co-locate each bucket before the partitioned write so a
-          // bucket's rows land in one file, sorted for row-group
-          // locality on (gr, doc_id)
-          .repartition(col("bucket"))
-          .sortWithinPartitions("gr", "doc_id", "pos")
-          .write.mode(mode).partitionBy("bucket").parquet(path)
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      // the incremental delta: same generation, same layout, appended
-      // — the merge discipline of m11_incr_agg specialized to fact
-      // rows (set union, no state to re-aggregate)
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      path
+    * postings for `dir`'s documents; returns the table path. */
+  def ensureTrgmPostings(s: SparkSession, dir: String): String = {
+    val path = indexRoot(dir).resolve("trgm_postings").toString
+    docIndex(trgmBuilt, s, dir, path) { (d, mode) =>
+      trgmPostingsOf(d)
+        // co-locate each bucket before the partitioned write so a
+        // bucket's rows land in one file, sorted for row-group
+        // locality on (gr, doc_id)
+        .repartition(col("bucket"))
+        .sortWithinPartitions("gr", "doc_id", "pos")
+        .write.mode(mode).partitionBy("bucket").parquet(path)
     }
+  }
 
   /** (doc_id, w, tf, bucket) — term frequency of every distinct word
     * of every doc, bucket = portable-md5-60(w) mod [[WordBuckets]].
@@ -282,58 +287,42 @@ object IndexStore {
     * index for `dir`'s documents: bucket-partitioned tf postings plus
     * a (doc_id, dl, source) length sidecar. BM25/DSIR serving reads
     * ONLY these tables — the corpus text is never re-tokenized at
-    * query time. Once per (JVM, dir). */
-  def ensureWordPostings(s: SparkSession, dir: String): WordIndexPaths =
-    built(wordBuilt, dir) {
-      val root = indexRoot(dir)
-      val paths = WordIndexPaths(
-        root.resolve("word_postings").toString,
-        root.resolve("word_doclen").toString,
-        root.resolve("word_stats").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def docsSplit(base: Boolean): DataFrame = docs.filter(
-        if (base) pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1
-        else pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1)
-      def writePostings(d: DataFrame, mode: String): Unit =
-        wordPostingsOf(d)
-          .repartition(col("bucket"))
-          .sortWithinPartitions("w", "doc_id")
-          .write.mode(mode).partitionBy("bucket").parquet(paths.postings)
-      def writeDoclen(d: DataFrame, mode: String): Unit =
-        d.select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("dl"),
-            col("source"))
-          .transform(Tables.packForWrite)
-          .write.mode(mode).parquet(paths.doclen)
-      def writeStats(d: DataFrame, mode: String): Unit =
-        d.select(size(split(col("text"), " ")).cast("long").as("dl"))
-          .agg(count(lit(1)).cast("long").as("n_docs"),
-            sum(col("dl")).cast("long").as("total_tokens"))
-          .coalesce(1)
-          .write.mode(mode).parquet(paths.stats)
-      writePostings(docsSplit(base = true), "overwrite")
-      writePostings(docsSplit(base = false), "append")
-      writeDoclen(docsSplit(base = true), "overwrite")
-      writeDoclen(docsSplit(base = false), "append")
-      writeStats(docsSplit(base = true), "overwrite")
-      writeStats(docsSplit(base = false), "append")
-      paths
+    * query time. */
+  def ensureWordPostings(s: SparkSession, dir: String): WordIndexPaths = {
+    val root = indexRoot(dir)
+    val paths = WordIndexPaths(
+      root.resolve("word_postings").toString,
+      root.resolve("word_doclen").toString,
+      root.resolve("word_stats").toString)
+    docIndex(wordBuilt, s, dir, paths) { (d, mode) =>
+      wordPostingsOf(d)
+        .repartition(col("bucket"))
+        .sortWithinPartitions("w", "doc_id")
+        .write.mode(mode).partitionBy("bucket").parquet(paths.postings)
+      d.select(col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("dl"),
+          col("source"))
+        .transform(Tables.packForWrite)
+        .write.mode(mode).parquet(paths.doclen)
+      d.select(size(split(col("text"), " ")).cast("long").as("dl"))
+        .agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(col("dl")).cast("long").as("total_tokens"))
+        .coalesce(1)
+        .write.mode(mode).parquet(paths.stats)
     }
+  }
 
   /** Fit the IVF coarse quantizer (KMeans k=[[IvfK]], seed 42, the
     * same hyperparameters the in-memory path used) on the BASE split
-    * (vec_id % [[IvfDeltaMod]] < [[IvfDeltaMod]]-1), persist the
-    * centroid root table + cell-partitioned base assignments, then
-    * absorb the remaining ~20% through [[appendIvf]] — so the
-    * standing index every probe serves is itself the product of the
-    * incremental-maintenance path, and the sim_ivf_* oracles certify
-    * it end-to-end (the trigram-postings discipline). Once per
-    * (JVM, dir). */
+    * ([[isBase]] on vec_id), persist the centroid root table +
+    * cell-partitioned base assignments, then absorb the delta through
+    * [[appendIvf]]: delta vectors are NOT part of the quantizer fit —
+    * each is assigned to the nearest EXISTING centroid with no re-fit,
+    * how a 100 TB vector index absorbs new data between periodic
+    * re-trainings. So the standing index every probe serves is itself
+    * the product of the incremental-maintenance path, and the
+    * sim_ivf_* oracles certify it end-to-end (the trigram-postings
+    * discipline). */
   def ensureIvf(s: SparkSession, dir: String): IvfPaths =
     built(ivfBuilt, dir) {
       import org.apache.spark.ml.clustering.KMeans
@@ -345,8 +334,7 @@ object IndexStore {
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("e"))
-      val base = emb.filter(
-        pmod(col("vec_id"), lit(IvfDeltaMod.toLong)) < IvfDeltaMod - 1)
+      val base = emb.filter(isBase(col("vec_id")))
         .withColumn("fv", array_to_vector(col("e")))
       // maxIter 5 / random seeded init: a coarse quantizer only
       // routes probes — see the r11 IVF notes; recall is pinned by
@@ -367,8 +355,7 @@ object IndexStore {
         .toDF("cell", "centroid")
         .coalesce(1)
         .write.mode("overwrite").parquet(paths.centroids)
-      appendIvf(s, paths, emb.filter(
-        pmod(col("vec_id"), lit(IvfDeltaMod.toLong)) === IvfDeltaMod - 1))
+      appendIvf(s, paths, emb.filter(isDelta(col("vec_id"))))
       paths
     }
 
@@ -389,18 +376,6 @@ object IndexStore {
 
   private val mhBuilt = TrieMap.empty[String, MinhashPaths]
 
-  /** Persisted MinHash dedup index (the trigram/word/IVF build→serve
-    * discipline applied to the near-dup family): a shingle-hash
-    * fingerprint store (doc_id, hs — the exact-verify input) and a
-    * banded signature table (doc_id, band, bhash — the candidate-
-    * generation input), band-partitioned. At 100 TB near-dup is not
-    * a query you re-derive from raw text per run — signatures are
-    * computed once per document on ingest and maintained as rows
-    * arrive; both tables are per-doc fact rows, so the base+delta
-    * split appends losslessly (incremental ≡ one-shot, pinned by
-    * MinhashIndexSpec, and the serve twin's hash-equality to the
-    * scan twin certifies the persisted content end-to-end). Once per
-    * (JVM, dir). */
   /** Per-doc MinHash signature projection — doc_id, hs (the 3-gram
     * shingle hashes, the exact-verify fingerprint), sig (the 32-hash
     * MinHash signature). ONE spelling shared by the index build and
@@ -419,14 +394,16 @@ object IndexStore {
         call_function("minhash_sig", col("hs"), lit(MhHashes)))
   }
 
-  /** Cluster-layout (8×4) banding of a [[minhashShingles]] frame —
-    * doc_id, band, bhash. Shared build/probe spelling, as above. */
-  def clusterBandsOf(sh: DataFrame): DataFrame = {
-    val crows = MhHashes / MhClusterBands
+  /** `bands`-way banding of a [[minhashShingles]] frame — doc_id,
+    * band, bhash, each band hashing MhHashes/bands signature rows:
+    * the search layout at [[MhBands]], the cluster layout at
+    * [[MhClusterBands]]. Shared build/probe spelling, as above. */
+  def bandsOf(sh: DataFrame, bands: Int): DataFrame = {
+    val rows = MhHashes / bands
     sh.select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(MhClusterBands - 1)),
+        explode(transform(sequence(lit(0), lit(bands - 1)),
           b => struct(b.as("band"),
-            xxhash64(slice(col("sig"), b * crows + 1, lit(crows)))
+            xxhash64(slice(col("sig"), b * rows + 1, lit(rows)))
               .as("bhash")))).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"),
         col("bk.bhash").as("bhash"))
@@ -441,54 +418,46 @@ object IndexStore {
           graft.operators.SimilarityQueries.wordGramExpr("words", 13),
           g => xxhash64(g))).as("g"))
 
-  def ensureMinhash(s: SparkSession, dir: String): MinhashPaths =
-    built(mhBuilt, dir) {
-      val root = indexRoot(dir)
-      val paths = MinhashPaths(
-        root.resolve("mh_shingles").toString,
-        root.resolve("mh_bands").toString,
-        root.resolve("mh_cbands").toString,
-        root.resolve("mh_cstats").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      val rows = MhHashes / MhBands
-      def write(d: DataFrame, mode: String): Unit = {
-        val sh = minhashShingles(s, d)
-          .localCheckpoint() // feeds BOTH table writes below
-        Tables.packForWrite(sh.select(col("doc_id"), col("hs")))
-          .write.mode(mode).parquet(paths.shingles)
-        sh.select(col("doc_id"),
-            explode(transform(sequence(lit(0), lit(MhBands - 1)),
-              b => struct(b.as("band"),
-                xxhash64(slice(col("sig"), b * rows + 1, lit(rows)))
-                  .as("bhash")))).as("bk"))
-          .select(col("doc_id"), col("bk.band").as("band"),
-            col("bk.bhash").as("bhash"))
-          .repartition(col("band"))
-          .write.mode(mode).partitionBy("band").parquet(paths.bands)
-        val cband = clusterBandsOf(sh)
-          .localCheckpoint() // feeds the banded write AND the census
-        cband
-          .repartition(col("band"))
-          .write.mode(mode).partitionBy("band").parquet(paths.cbands)
-        // additive bucket census of the cluster banding (count +
-        // min-id rep are both mergeable, the m11 discipline): the
-        // incremental-clustering serve re-sums these partial rows
-        // instead of re-scanning + re-grouping the full banded table
-        cband.groupBy(col("band"), col("bhash"))
-          .agg(count(lit(1)).as("n"), min(col("doc_id")).as("rep"))
-          .write.mode(mode).parquet(paths.cstats)
-      }
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      paths
+  /** Persisted MinHash dedup index (the trigram/word/IVF build→serve
+    * discipline applied to the near-dup family): a shingle-hash
+    * fingerprint store (doc_id, hs — the exact-verify input) and a
+    * banded signature table (doc_id, band, bhash — the candidate-
+    * generation input), band-partitioned. At 100 TB near-dup is not
+    * a query you re-derive from raw text per run — signatures are
+    * computed once per document on ingest and maintained as rows
+    * arrive; both tables are per-doc fact rows, so the base+delta
+    * split appends losslessly (incremental ≡ one-shot, pinned by
+    * MinhashIndexSpec, and the serve twin's hash-equality to the
+    * scan twin certifies the persisted content end-to-end). */
+  def ensureMinhash(s: SparkSession, dir: String): MinhashPaths = {
+    val root = indexRoot(dir)
+    val paths = MinhashPaths(
+      root.resolve("mh_shingles").toString,
+      root.resolve("mh_bands").toString,
+      root.resolve("mh_cbands").toString,
+      root.resolve("mh_cstats").toString)
+    docIndex(mhBuilt, s, dir, paths) { (d, mode) =>
+      val sh = minhashShingles(s, d)
+        .localCheckpoint() // feeds BOTH table writes below
+      Tables.packForWrite(sh.select(col("doc_id"), col("hs")))
+        .write.mode(mode).parquet(paths.shingles)
+      bandsOf(sh, MhBands)
+        .repartition(col("band"))
+        .write.mode(mode).partitionBy("band").parquet(paths.bands)
+      val cband = bandsOf(sh, MhClusterBands)
+        .localCheckpoint() // feeds the banded write AND the census
+      cband
+        .repartition(col("band"))
+        .write.mode(mode).partitionBy("band").parquet(paths.cbands)
+      // additive bucket census of the cluster banding (count +
+      // min-id rep are both mergeable, the m11 discipline): the
+      // incremental-clustering serve re-sums these partial rows
+      // instead of re-scanning + re-grouping the full banded table
+      cband.groupBy(col("band"), col("bhash"))
+        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("rep"))
+        .write.mode(mode).parquet(paths.cstats)
     }
+  }
 
   case class SimhashPaths(sigs: String)
 
@@ -510,36 +479,24 @@ object IndexStore {
     * Rows are per-doc facts, so the doc-keyed base+delta split
     * appends losslessly (incremental ≡ one-shot, pinned by
     * SimhashIndexSpec; the serve twin's hash-equality to the scan
-    * twin certifies the content end-to-end). Once per (JVM, dir). */
-  def ensureSimhash(s: SparkSession, dir: String): SimhashPaths =
-    built(shBuilt, dir) {
-      val paths = SimhashPaths(
-        indexRoot(dir).resolve("simhash_sigs").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(d: DataFrame, mode: String): Unit =
-        d.withColumn("words", split(col("text"), " "))
-          .select(col("doc_id"),
-            transform(
-              graft.operators.SimilarityQueries.wordGramExpr("words", 3),
-              g => graft.core.PortableHash.md5Hash60(g)).as("hs"))
-          .select(col("doc_id"),
-            call_function("simhash32", col("hs")).as("simhash"))
-          .select(col("doc_id"), col("simhash"),
-            graft.operators.SimilarityQueries
-              .shComboPosexplode("simhash").as(Seq("combo", "k")))
-          .repartition(col("combo"))
-          .write.mode(mode).partitionBy("combo").parquet(paths.sigs)
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      paths
+    * twin certifies the content end-to-end). */
+  def ensureSimhash(s: SparkSession, dir: String): SimhashPaths = {
+    val paths = SimhashPaths(indexRoot(dir).resolve("simhash_sigs").toString)
+    docIndex(shBuilt, s, dir, paths) { (d, mode) =>
+      d.withColumn("words", split(col("text"), " "))
+        .select(col("doc_id"),
+          transform(
+            graft.operators.SimilarityQueries.wordGramExpr("words", 3),
+            g => graft.core.PortableHash.md5Hash60(g)).as("hs"))
+        .select(col("doc_id"),
+          call_function("simhash32", col("hs")).as("simhash"))
+        .select(col("doc_id"), col("simhash"),
+          graft.operators.SimilarityQueries
+            .shComboPosexplode("simhash").as(Seq("combo", "k")))
+        .repartition(col("combo"))
+        .write.mode(mode).partitionBy("combo").parquet(paths.sigs)
     }
+  }
 
   case class Gram13Paths(grams: String)
 
@@ -551,26 +508,13 @@ object IndexStore {
     * EVAL SETS CHANGE with every benchmark release while the corpus
     * fingerprints do not, so production decontamination probes a
     * maintained gram index with each new eval list rather than
-    * re-shingling the corpus per release. Once per (JVM, dir). */
-  def ensureGram13(s: SparkSession, dir: String): Gram13Paths =
-    built(gram13Built, dir) {
-      val paths = Gram13Paths(
-        indexRoot(dir).resolve("decon_grams").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(d: DataFrame, mode: String): Unit =
-        Tables.packForWrite(gram13Of(d))
-          .write.mode(mode).parquet(paths.grams)
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      paths
+    * re-shingling the corpus per release. */
+  def ensureGram13(s: SparkSession, dir: String): Gram13Paths = {
+    val paths = Gram13Paths(indexRoot(dir).resolve("decon_grams").toString)
+    docIndex(gram13Built, s, dir, paths) { (d, mode) =>
+      Tables.packForWrite(gram13Of(d)).write.mode(mode).parquet(paths.grams)
     }
+  }
 
   case class WinnowPaths(fps: String)
 
@@ -582,30 +526,18 @@ object IndexStore {
     * the doc-keyed base+delta append is lossless. The winnow
     * selection (the native winnow_fps expression over the full text)
     * is the expensive map-side stage; persisting it turns every
-    * pair-search serve into joins over a slim long-pair table. Once
-    * per (JVM, dir). */
-  def ensureWinnow(s: SparkSession, dir: String): WinnowPaths =
-    built(winnowBuilt, dir) {
-      val paths = WinnowPaths(indexRoot(dir).resolve("winnow_fps").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(d: DataFrame, mode: String): Unit =
-        d.select(col("doc_id"),
-            expr(s"winnow_fps(split(text, ' '), " +
-              s"${graft.operators.TextQueries.WinnowWindow})").as("fps"))
-          .select(col("doc_id"), explode(col("fps")).as("fp"))
-          .transform(Tables.packForWrite)
-          .write.mode(mode).parquet(paths.fps)
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      paths
+    * pair-search serve into joins over a slim long-pair table. */
+  def ensureWinnow(s: SparkSession, dir: String): WinnowPaths = {
+    val paths = WinnowPaths(indexRoot(dir).resolve("winnow_fps").toString)
+    docIndex(winnowBuilt, s, dir, paths) { (d, mode) =>
+      d.select(col("doc_id"),
+          expr(s"winnow_fps(split(text, ' '), " +
+            s"${graft.operators.TextQueries.WinnowWindow})").as("fps"))
+        .select(col("doc_id"), explode(col("fps")).as("fp"))
+        .transform(Tables.packForWrite)
+        .write.mode(mode).parquet(paths.fps)
     }
+  }
 
   case class CdcPaths(chunks: String, census: String)
 
@@ -619,33 +551,20 @@ object IndexStore {
     * over disjoint doc sets, re-summed at serve). What the index
     * removes from every serve: the word explode, the per-doc lag
     * window + cumsum, and the chunk-text md5 — the whole
-    * chunk-construction pipeline runs once, on ingest. Once per
-    * (JVM, dir). */
-  def ensureCdcChunks(s: SparkSession, dir: String): CdcPaths =
-    built(cdcBuilt, dir) {
-      val root = indexRoot(dir)
-      val paths = CdcPaths(
-        root.resolve("cdc_chunks").toString,
-        root.resolve("cdc_census").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(d: DataFrame, mode: String): Unit = {
-        val ch = graft.operators.RetrievalQueries.cdcChunkHashes(d)
-          .localCheckpoint() // feeds both table writes below
-        Tables.packForWrite(ch).write.mode(mode).parquet(paths.chunks)
-        ch.groupBy(col("h")).agg(count(lit(1)).as("occ"))
-          .write.mode(mode).parquet(paths.census)
-      }
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      paths
+    * chunk-construction pipeline runs once, on ingest. */
+  def ensureCdcChunks(s: SparkSession, dir: String): CdcPaths = {
+    val root = indexRoot(dir)
+    val paths = CdcPaths(
+      root.resolve("cdc_chunks").toString,
+      root.resolve("cdc_census").toString)
+    docIndex(cdcBuilt, s, dir, paths) { (d, mode) =>
+      val ch = graft.operators.RetrievalQueries.cdcChunkHashes(d)
+        .localCheckpoint() // feeds both table writes below
+      Tables.packForWrite(ch).write.mode(mode).parquet(paths.chunks)
+      ch.groupBy(col("h")).agg(count(lit(1)).as("occ"))
+        .write.mode(mode).parquet(paths.census)
     }
+  }
 
   case class ContainmentPaths(docs: String, freq: String)
 
@@ -663,55 +582,33 @@ object IndexStore {
     * exactly the part that must reflect newly-absorbed deltas.
     * What the index removes from every serve: the text parse, gram
     * hashing, per-doc sorts, and the corpus-wide frequency
-    * aggregate. Once per (JVM, dir). */
-  def ensureContainment(s: SparkSession, dir: String): ContainmentPaths =
-    built(contBuilt, dir) {
-      val root = indexRoot(dir)
-      val paths = ContainmentPaths(
-        root.resolve("cont_docs").toString,
-        root.resolve("cont_freq").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(d: DataFrame, mode: String): Unit = {
-        val fp = d
-          .withColumn("words", split(col("text"), " "))
-          .select(col("doc_id"),
-            sort_array(transform(
-              graft.operators.SimilarityQueries.wordGramExpr("words", 3),
-              g => xxhash64(g))).as("g"))
-          .withColumn("na", size(col("g")).cast("long"))
-          .localCheckpoint() // feeds both table writes below
-        Tables.packForWrite(fp).write.mode(mode).parquet(paths.docs)
-        fp.select(explode(col("g")).as("gr"))
-          .groupBy(col("gr")).agg(count(lit(1)).as("nf"))
-          .write.mode(mode).parquet(paths.freq)
-      }
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          < TrgmDeltaMod - 1), "overwrite")
-      write(docs.filter(
-        pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-          === TrgmDeltaMod - 1), "append")
-      paths
+    * aggregate. */
+  def ensureContainment(s: SparkSession, dir: String): ContainmentPaths = {
+    val root = indexRoot(dir)
+    val paths = ContainmentPaths(
+      root.resolve("cont_docs").toString,
+      root.resolve("cont_freq").toString)
+    docIndex(contBuilt, s, dir, paths) { (d, mode) =>
+      val fp = d
+        .withColumn("words", split(col("text"), " "))
+        .select(col("doc_id"),
+          sort_array(transform(
+            graft.operators.SimilarityQueries.wordGramExpr("words", 3),
+            g => xxhash64(g))).as("g"))
+        .withColumn("na", size(col("g")).cast("long"))
+        .localCheckpoint() // feeds both table writes below
+      Tables.packForWrite(fp).write.mode(mode).parquet(paths.docs)
+      fp.select(explode(col("g")).as("gr"))
+        .groupBy(col("gr")).agg(count(lit(1)).as("nf"))
+        .write.mode(mode).parquet(paths.freq)
     }
+  }
 
   /** Co-purchase graph index layout buckets: `pairs` rows are
     * hive-partitioned by `bucket` = u mod [[GraphBuckets]], so a
     * "neighbors of part X" point probe prunes to 1/[[GraphBuckets]]
     * of the files (the trigram-bucket discipline on graph edges). */
   val GraphBuckets = 32
-
-  /** Incremental-build split for the graph index, keyed on ORDERS
-    * (l_orderkey % [[GraphDeltaMod]] == [[GraphDeltaMod]]-1 orders
-    * form the appended delta): pair co-occurrence counts and item
-    * frequencies are both ADDITIVE over disjoint order sets, so the
-    * delta appends partial-count rows and the serve side re-sums by
-    * key — the m11_incr_agg merge discipline, here modeling
-    * order-batch arrival (a basket arrives whole; rows never join an
-    * already-indexed order later). */
-  val GraphDeltaMod = 5
 
   case class GraphPaths(pairs: String, freq: String, adj: String,
       stats: String)
@@ -732,7 +629,9 @@ object IndexStore {
     * delta is lossless (incremental ≡ one-shot after the serve-side
     * re-sum — GraphIndexSpec pins this) and the serve twins'
     * hash-equality to the scan twins certifies the persisted content
-    * end-to-end. Once per (JVM, dir). */
+    * end-to-end. The split is keyed on ORDERS ([[isDelta]] on
+    * l_orderkey), modeling order-batch arrival: a basket arrives
+    * whole; rows never join an already-indexed order later. */
   def ensureGraphEdges(s: SparkSession, dir: String): GraphPaths =
     built(graphBuilt, dir) {
       val root = indexRoot(dir)
@@ -742,11 +641,6 @@ object IndexStore {
         root.resolve("graph_adj").toString,
         root.resolve("graph_stats").toString)
       val li = Tables.lineitem(s, dir)
-      def split(base: Boolean): DataFrame = li.filter(
-        if (base) pmod(col("l_orderkey"), lit(GraphDeltaMod.toLong))
-          < GraphDeltaMod - 1
-        else pmod(col("l_orderkey"), lit(GraphDeltaMod.toLong))
-          === GraphDeltaMod - 1)
       def write(d: DataFrame, mode: String): Unit = {
         val items = d
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -765,8 +659,8 @@ object IndexStore {
         items.groupBy(col("p")).agg(count(lit(1)).as("item_n"))
           .write.mode(mode).parquet(paths.freq)
       }
-      write(split(base = true), "overwrite")
-      write(split(base = false), "append")
+      write(li.filter(isBase(col("l_orderkey"))), "overwrite")
+      write(li.filter(isDelta(col("l_orderkey"))), "append")
       writeGraphViews(s, paths)
       paths
     }
@@ -804,7 +698,8 @@ object IndexStore {
 
   /** Refresh path for the graph serving views after a delta append to
     * the pairs table: re-derive adjacency + stats from the maintained
-    * truth and bump the dataset's index version. NOT safe to run
+    * truth. The caller ([[Maintenance.refreshAll]]) bumps the index
+    * version once after every view is current. NOT safe to run
     * concurrently with serves of the same dir (overwrite deletes
     * files mid-read) — maintenance windows, like any materialized-
     * view refresh. */
@@ -812,7 +707,6 @@ object IndexStore {
       dir: String): GraphPaths = {
     val paths = ensureGraphEdges(s, dir)
     writeGraphViews(s, paths)
-    bumpVersion(dir)
     paths
   }
 
@@ -827,7 +721,7 @@ object IndexStore {
     * when delta docs arrive. Like ranks/adjacency, labels are not
     * additive under new edges (components merge), so this is a
     * derived serving view refreshed from the maintained index
-    * tables. Once per (JVM, dir). */
+    * tables. */
   def ensureBaseClusters(s: SparkSession, dir: String): BaseClusterPaths =
     built(baseClustersBuilt, dir)(writeBaseClusters(s, dir))
 
@@ -846,13 +740,12 @@ object IndexStore {
 
   /** Refresh path for the base cluster state (labels are not additive
     * under new edges — components merge), re-derived from the
-    * maintained MinHash index tables; bumps the index version. Same
-    * maintenance-window caveat as [[refreshGraphViews]]. */
+    * maintained MinHash index tables. Same version and
+    * maintenance-window contract as [[refreshGraphViews]]. */
   private[graft] def refreshBaseClusters(s: SparkSession,
       dir: String): BaseClusterPaths = {
     val paths = writeBaseClusters(s, dir)
     baseClustersBuilt.put(dir, paths)
-    bumpVersion(dir)
     paths
   }
 
@@ -864,8 +757,7 @@ object IndexStore {
     * arrive. Like `graph_adj`, ranks are NOT additive under appends
     * (the whole vector shifts), so this is a derived view refreshed
     * at build time from the maintained base split; the warm-start
-    * serve then pays 2–3 power steps instead of the from-scratch 8.
-    * Once per (JVM, dir). */
+    * serve then pays 2–3 power steps instead of the from-scratch 8. */
   def ensureBaseRanks(s: SparkSession, dir: String): String =
     built(ranksBuilt, dir)(writeBaseRanks(s, dir))
 
@@ -879,13 +771,12 @@ object IndexStore {
 
   /** Refresh path for the converged base ranks (a rank vector shifts
     * wholesale under appends — not additive), re-derived from the
-    * maintained base split; bumps the index version. Same
-    * maintenance-window caveat as [[refreshGraphViews]]. */
+    * maintained base split. Same version and maintenance-window
+    * contract as [[refreshGraphViews]]. */
   private[graft] def refreshBaseRanks(s: SparkSession,
       dir: String): String = {
     val path = writeBaseRanks(s, dir)
     ranksBuilt.put(dir, path)
-    bumpVersion(dir)
     path
   }
 
@@ -895,42 +786,29 @@ object IndexStore {
     * delta-ingest probe ([[graft.operators.PipelineQueries
     * .pipeDeltaIngest]]) prunes to the base partition, plus a
     * per-(split, source) census page. Base overwrite + delta append,
-    * the standing incremental discipline ([[TrgmDeltaMod]] split,
-    * same as every other index family). */
+    * the standing incremental discipline every index family shares. */
   case class CatalogPaths(digests: String, stats: String)
 
   private val catalogBuilt = TrieMap.empty[String, CatalogPaths]
 
-  def ensureCatalog(s: SparkSession, dir: String): CatalogPaths =
-    built(catalogBuilt, dir) {
-      val root = indexRoot(dir)
-      val paths = CatalogPaths(
-        root.resolve("catalog_digests").toString,
-        root.resolve("catalog_stats").toString)
-      // fanOut (r21): every build below runs heavy per-doc compute
-      // (shingling, gram hashing, chunking) that would otherwise
-      // serialize inside the single-row-group scan task
-      val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
-      def write(base: Boolean): Unit = {
-        val mode = if (base) "overwrite" else "append"
-        val d = docs.filter(
-          if (base) pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-            < TrgmDeltaMod - 1
-          else pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
-            === TrgmDeltaMod - 1)
-          .select(lit(if (base) "base" else "delta").as("split"),
-            col("doc_id"), col("source"), md5(col("text")).as("text_md5"))
-          .localCheckpoint() // feeds the digest AND census writes
-        Tables.packForWrite(d)
-          .write.mode(mode).partitionBy("split").parquet(paths.digests)
-        d.groupBy(col("split"), col("source"))
-          .agg(count(lit(1)).as("n_docs"))
-          .write.mode(mode).parquet(paths.stats)
-      }
-      write(base = true)
-      write(base = false)
-      paths
+  def ensureCatalog(s: SparkSession, dir: String): CatalogPaths = {
+    val root = indexRoot(dir)
+    val paths = CatalogPaths(
+      root.resolve("catalog_digests").toString,
+      root.resolve("catalog_stats").toString)
+    docIndex(catalogBuilt, s, dir, paths) { (docs, mode) =>
+      val split = if (mode == "overwrite") "base" else "delta"
+      val d = docs
+        .select(lit(split).as("split"),
+          col("doc_id"), col("source"), md5(col("text")).as("text_md5"))
+        .localCheckpoint() // feeds the digest AND census writes
+      Tables.packForWrite(d)
+        .write.mode(mode).partitionBy("split").parquet(paths.digests)
+      d.groupBy(col("split"), col("source"))
+        .agg(count(lit(1)).as("n_docs"))
+        .write.mode(mode).parquet(paths.stats)
     }
+  }
 
   /** Product-quantization layout (FAISS `IVF…,PQ8` family): the
     * 64-dim vectors split into [[PqM]] contiguous subspaces of
@@ -958,7 +836,7 @@ object IndexStore {
     * mode, the delta via the same path in append mode — so, as with
     * trigram/word/IVF, the standing index IS the product of the
     * incremental-maintenance path and the serve oracle certifies it
-    * end-to-end. Once per (JVM, dir). */
+    * end-to-end. */
   def ensurePq(s: SparkSession, dir: String): PqPaths =
     built(pqBuilt, dir) {
       import org.apache.spark.ml.clustering.KMeans
@@ -970,12 +848,8 @@ object IndexStore {
         root.resolve("pq_codes").toString)
       val av = s.read.parquet(ivf.assignments)
         .select(col("vec_id"), col("label"), col("e"), col("cell"))
-      def split(base: Boolean) = av.filter(
-        if (base) pmod(col("vec_id"), lit(IvfDeltaMod.toLong))
-          < IvfDeltaMod - 1
-        else pmod(col("vec_id"), lit(IvfDeltaMod.toLong))
-          === IvfDeltaMod - 1)
-      val base = split(base = true).localCheckpoint() // PqM fits read it
+      val base = av.filter(isBase(col("vec_id")))
+        .localCheckpoint() // PqM fits read it
       // one seeded coarse fit per subspace — codebook quality only
       // shapes recall (pinned by AnnStructuredSpec's PQ gate), never
       // correctness: the oracles read the PERSISTED codebooks
@@ -1005,7 +879,7 @@ object IndexStore {
         .coalesce(1)
         .write.mode("overwrite").parquet(paths.codebooks)
       appendPq(s, paths, base, "overwrite")
-      appendPq(s, paths, split(base = false), "append")
+      appendPq(s, paths, av.filter(isDelta(col("vec_id"))), "append")
       paths
     }
 

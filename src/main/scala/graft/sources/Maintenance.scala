@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   *      pairs census), [[IndexStore.refreshBaseRanks]] (converged
   *      PageRank), [[IndexStore.refreshBaseClusters]] (verified
   *      edges + min labels);
-  *   3. bumps the dataset's [[IndexStore.indexVersion]] — which
+  *   3. bumps the dataset's [[IndexStore.indexVersion]] once — which
   *      invalidates the version-keyed ingest probe context (ADVICE
   *      r19's staleness bug) — and eagerly rebuilds it, so the next
   *      streaming micro-batch pays only batch-dependent joins.
@@ -64,8 +64,9 @@ object Maintenance {
     val graph = IndexStore.refreshGraphViews(s, dir)
     val ranks = IndexStore.refreshBaseRanks(s, dir)
     val clusters = IndexStore.refreshBaseClusters(s, dir)
-    // 3. new index generation: invalidate + eagerly rebuild the
-    //    version-keyed ingest probe context
+    // 3. new index generation (the one bump of the refresh — no
+    //    version-keyed memo is read between the view rewrites):
+    //    invalidate + eagerly rebuild the ingest probe context
     IndexStore.bumpVersion(dir)
     graft.operators.PipelineQueries.probeCtx(s, dir)
     RefreshReport(dir, IndexStore.indexVersion(dir),

@@ -142,7 +142,7 @@ class DedupClusterSpec extends SparkSpec {
       "doc and incremental still equals the full recompute") {
     // The planted drift ADVICE r18/r19 asked for: a 55-member pile of
     // IDENTICAL docs whose overall minimum doc_id (4) is a DELTA doc
-    // (4 % TrgmDeltaMod == TrgmDeltaMod-1), while every other member
+    // (IndexStore.isDelta holds for 4), while every other member
     // is base-split. Every cluster-band bucket the pile shares holds
     // 55 members (> maxBucket 50), so the persisted base edge set
     // anchors its stars at the BASE rep (min base id 100) — and the
@@ -150,10 +150,15 @@ class DedupClusterSpec extends SparkSpec {
     // the two star sets must still converge to the same components
     // as the from-scratch recompute, with the DRIFTED rep as the min
     // label.
-    val M = graft.sources.IndexStore.TrgmDeltaMod
-    assert(4L % M == M - 1, "doc 4 must be a delta doc under the split")
+    def splitIds(from: Long, until: Long,
+        pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+      spark.range(from, until).filter(pred(col("id")))
+        .collect().map(_.longValue).toSeq.sorted
+    assert(splitIds(4L, 5L, graft.sources.IndexStore.isDelta) == Seq(4L),
+      "doc 4 must be a delta doc under the split")
     val text = baseWords.mkString(" ")
-    val baseIds = (100L until 168L).filter(_ % M != M - 1) // 54 base ids
+    val baseIds = // 55 base ids
+      splitIds(100L, 168L, graft.sources.IndexStore.isBase)
     val pile = 4L +: baseIds
     val rows = pile.map(i => (i, text, "s")) :+
       (999L, (0 until 60).map(i => s"lone$i").mkString(" "), "s")

@@ -48,9 +48,7 @@ class GraphIndexSpec extends SparkSpec {
     // the delta split actually contributed rows (the test would pass
     // vacuously if the base covered everything)
     val deltaOrders = graft.core.Tables.lineitem(spark, sfDir)
-      .filter(pmod(col("l_orderkey"),
-        lit(IndexStore.GraphDeltaMod.toLong))
-        === IndexStore.GraphDeltaMod - 1)
+      .filter(IndexStore.isDelta(col("l_orderkey")))
       .count()
     assert(deltaOrders > 0, "corpus has no delta-split orders")
   }

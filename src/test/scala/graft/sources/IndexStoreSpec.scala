@@ -220,8 +220,7 @@ class IndexStoreSpec extends SparkSpec {
       .sortBy(_._1)
     assert(cents.length == IndexStore.IvfK)
     val delta = spark.read.parquet(paths.assignments)
-      .filter(pmod(col("vec_id"), lit(IndexStore.IvfDeltaMod.toLong))
-        === IndexStore.IvfDeltaMod - 1)
+      .filter(IndexStore.isDelta(col("vec_id")))
       .select(col("vec_id"), col("e"), col("cell").cast("int"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
@@ -253,5 +252,51 @@ class IndexStoreSpec extends SparkSpec {
     assert(persistedIds.sameElements(baseIds),
       s"index covers ${persistedIds.length} vectors, collection has " +
         s"${baseIds.length}")
+  }
+
+  test("isBase and isDelta split ids 0..99 without overlap or gap, " +
+      "and select the same ids as their SQL spellings") {
+    val ids = spark.range(100).toDF("k")
+    def keys(df: DataFrame): Set[Long] =
+      df.collect().map(_.getLong(0)).toSet
+    val base = keys(ids.filter(IndexStore.isBase(col("k"))))
+    val delta = keys(ids.filter(IndexStore.isDelta(col("k"))))
+    assert(delta.size == 100 / IndexStore.DeltaMod)
+    assert((base intersect delta).isEmpty, "a key is in both splits")
+    assert(base ++ delta == (0L until 100L).toSet, "a key is in no split")
+    ids.createOrReplaceTempView("split_keys")
+    def viaSql(pred: String) =
+      keys(spark.sql(s"SELECT k FROM split_keys WHERE $pred"))
+    assert(viaSql(IndexStore.isBaseSql("k")) == base)
+    assert(viaSql(IndexStore.isDeltaSql("k")) == delta)
+  }
+
+  test("the first ensure of a document family on a fresh corpus bumps " +
+      "the index version once; a second call is a memoized no-op") {
+    import spark.implicits._
+    val dirPath = java.nio.file.Files.createTempDirectory("graft_fresh")
+    val dir = dirPath.toString
+    try {
+      (0L until 10L)
+        .map(i => (i, (0 until 20).map(w => s"w${i}_$w").mkString(" ")))
+        .toDF("doc_id", "text")
+        .selectExpr("doc_id", "text", "'en' AS lang", "'s' AS source",
+          "CAST(length(text) AS LONG) AS n_chars")
+        .write.parquet(s"$dir/documents.parquet")
+      val v0 = IndexStore.indexVersion(dir)
+      val first = IndexStore.ensureGram13(spark, dir)
+      assert(IndexStore.indexVersion(dir) == v0 + 1)
+      // base overwrite + delta append together hold every doc
+      assert(spark.read.parquet(first.grams).select("doc_id").distinct()
+        .collect().map(_.getLong(0)).toSet == (0L until 10L).toSet)
+      assert(IndexStore.ensureGram13(spark, dir) == first)
+      assert(IndexStore.indexVersion(dir) == v0 + 1)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(dirPath)
+      try files.iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+      finally files.close()
+    }
   }
 }

@@ -70,11 +70,18 @@ class MaintenanceSpec extends SparkSpec {
       "cc_base_labels diverges from baseClusterState")
   }
 
+  test("a refresh bumps the index version exactly once") {
+    val first = Maintenance.refreshAll(spark, sfDir)
+    val second = Maintenance.refreshAll(spark, sfDir)
+    assert(second.version == first.version + 1,
+      s"versions ${first.version} then ${second.version}")
+  }
+
   test("a catalog append after the probe context is cached stays " +
       "invisible until the version bumps — then it gates a batch doc") {
     import spark.implicits._
-    // isolated 3-doc base corpus (ids 0..2 are base-split under the
-    // TrgmDeltaMod discipline) — the shared sf corpus must not see
+    // isolated 3-doc base corpus (ids 0..2 are IndexStore.isBase
+    // ids) — the shared sf corpus must not see
     // this test's out-of-band append
     def clean(tag: String) = "a the b and c " +
       (1 to 30).map(i => s"$tag$i").mkString(" ")

@@ -53,8 +53,7 @@ class PqIndexSpec extends SparkSpec {
         r.getSeq[Double](r.fieldIndex("centroid")).toArray)
       .toMap
     val delta = spark.read.parquet(paths.codes)
-      .filter(pmod(col("vec_id"), lit(IndexStore.IvfDeltaMod.toLong))
-        === IndexStore.IvfDeltaMod - 1)
+      .filter(IndexStore.isDelta(col("vec_id")))
       .join(spark.read.parquet(ivf.assignments)
         .select(col("vec_id"), col("e")), "vec_id")
       .select(col("vec_id"), col("codes"), col("e"))
