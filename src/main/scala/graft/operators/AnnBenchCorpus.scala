@@ -1,8 +1,8 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.SparkSession
+
+import graft.sources.IndexStore
 
 /** Deterministic CLUSTERED embedding corpus for ANN index-quality
   * measurement (VERDICT r12 task #2).
@@ -48,22 +48,18 @@ object AnnBenchCorpus {
   val Noise = 0.042
   val Seed = 4213L
 
-  private val built = TrieMap.empty[String, String]
-
   /** Generate (driver-side: ~5k × 64 doubles) and persist the
-    * corpus; returns the dataset dir. `perCluster` scales the corpus
-    * for spec-speed runs. */
-  def ensure(s: SparkSession, perCluster: Int = PerCluster): String =
-    built.getOrElseUpdate(s"pc$perCluster", {
-      // process-unique path (ADVICE r13, same rationale as
-      // IndexStore.indexRoot): a concurrent JVM regenerating the
-      // corpus must never overwrite files this one is mid-read on —
-      // content is deterministic, but a parquet overwrite is not
-      // atomic
-      val dir = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft_ann_structured_${graft.sources.IndexStore.processToken}",
-        s"pc$perCluster").toString
+    * corpus through IndexStore's build registry; returns the dataset
+    * dir. The dir lies under this process's root (ADVICE r13, the
+    * [[IndexStore.indexRoot]] rationale): a concurrent JVM
+    * regenerating the corpus must never overwrite files this one is
+    * mid-read on — content is deterministic, but a parquet overwrite
+    * is not atomic.
+    * `perCluster` scales the corpus for spec-speed runs. */
+  def ensure(s: SparkSession, perCluster: Int = PerCluster): String = {
+    val dir = IndexStore.processRoot
+      .resolve("ann_structured").resolve(s"pc$perCluster").toString
+    IndexStore.built("ann_structured", dir, dir) {
       val rnd = new java.util.Random(Seed)
       def gaussianVec(): Array[Double] =
         Array.fill(Dim)(rnd.nextGaussian())
@@ -86,6 +82,6 @@ object AnnBenchCorpus {
       rows.toDF("vec_id", "embedding", "label")
         .repartition(8)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      dir
-    })
+    }
+  }
 }

@@ -56,10 +56,14 @@ object RelationalQueries {
     * reference's training-data load (fraud_detection_model.py:76) and
     * test-split export (fraud_detection_model.py:91-94), round-tripped
     * so the oracle is the identity projection. Explicit schema rather
-    * than inferSchema: saves the inference scan (SURVEY §4). */
+    * than inferSchema: saves the inference scan (SURVEY §4). Each call
+    * writes its own dir under the process root, so a returned frame
+    * never reads files a later call overwrote, and the root's reaper
+    * bounds what the calls leave. */
   def s1CsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_csv_roundtrip").toString
+    val tmp = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(
+        graft.sources.IndexStore.processRoot), "csv_roundtrip").toString
     Tables.orders(s, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .write.mode("overwrite").option("header", "true").csv(tmp)

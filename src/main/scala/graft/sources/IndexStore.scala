@@ -42,18 +42,23 @@ import graft.functions.Md5Hash60
   * partition-aligned append and the merged table is row-identical to
   * a one-shot build (IndexStoreSpec pins this).
   *
-  * Builds are memoized per (JVM, dataset) and written under a
-  * PROCESS-UNIQUE root (ADVICE r13): KMeans cell ids depend on the
-  * fitting session's partitioning, so an index from another JVM could
-  * disagree with this JVM's probe choices, and a shared on-disk path
-  * would let a concurrent or later JVM overwrite files this process —
-  * or a dumped oracle SQL — still reads. With per-process roots every
-  * built index is immutable after its build: the serve path, the
-  * specs, and the DuckDB compare (which runs AFTER Verify exits and
-  * reads the path Verify interpolated) all see exactly the bytes this
-  * process wrote. Roots live under the system temp dir and are left
-  * for the OS to reap — they MUST survive process exit for the
-  * oracle compare.
+  * Builds are memoized per (JVM, family, dataset) in one registry
+  * ([[built]]) and written under a PROCESS-UNIQUE root (ADVICE r13):
+  * KMeans cell ids depend on the fitting session's partitioning, so an
+  * index from another JVM could disagree with this JVM's probe
+  * choices, and a shared on-disk path would let a concurrent or later
+  * JVM overwrite files this process — or a dumped oracle SQL — still
+  * reads. With per-process roots every built index is immutable after
+  * its build: the serve path, the specs, and the DuckDB compare (which
+  * runs AFTER Verify exits and reads the path Verify interpolated) all
+  * see exactly the bytes this process wrote. The same root
+  * ([[processRoot]]) holds everything else a process builds outside a
+  * dataset: the structured ANN corpus
+  * ([[graft.operators.AnnBenchCorpus]]), the layout copies of
+  * [[LayoutQueries]] and per-call scratch such as the CSV round trip.
+  * Roots live under the system temp dir and survive process exit —
+  * they MUST, for the oracle compare — and one reaper
+  * ([[reapStaleRoots]]) removes other processes' expired roots.
   */
 object IndexStore {
 
@@ -115,10 +120,6 @@ object IndexStore {
     * prunes to ≤ that many of 64 partition dirs. */
   val WordBuckets = 64
 
-  private val trgmBuilt = TrieMap.empty[String, String]
-  private val ivfBuilt = TrieMap.empty[String, IvfPaths]
-  private val wordBuilt = TrieMap.empty[String, WordIndexPaths]
-
   /** Monotonic per-dataset index VERSION (r20, ADVICE r19): bumped by
     * every index build / serving-view refresh for `dir` in this JVM.
     * Caches that memoize index-DERIVED structures (e.g. [[graft
@@ -135,25 +136,43 @@ object IndexStore {
   def bumpVersion(dir: String): Unit =
     indexVersions.updateWith(dir)(v => Some(v.getOrElse(0L) + 1L))
 
-  /** Memoized build wrapper every ensure* body runs through: each
-    * index is built once per (JVM, dir), and the dataset's index
-    * version is bumped when a build actually ran — the single choke
-    * point that keeps version-keyed derived caches honest. */
-  private def built[A](cache: TrieMap[String, A], dir: String)(
-      build: => A): A =
-    cache.getOrElseUpdate(dir, { val a = build; bumpVersion(dir); a })
+  /** The one registry of JVM-scoped builds: the (family, dir) pairs
+    * this process has written. Every family's paths are a pure
+    * function of [[indexRoot]], so only the fact of a build is
+    * recorded. */
+  private val builds = TrieMap.empty[(String, String), Unit]
 
-  /** Per-(process, dataset) index root under the system temp dir.
-    * Process-unique so no other JVM can overwrite it (ADVICE r13);
-    * durable past process exit, because the dumped oracle SQL
-    * interpolates these paths and the DuckDB compare runs in a later
-    * process. */
-  def indexRoot(dir: String): java.nio.file.Path = {
-    reapStaleRoots
-    java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_index",
-      processToken, dir.replaceAll("[^A-Za-z0-9._-]", "_"))
+  /** Memoized build wrapper every ensure* body runs through: `build`
+    * runs once per (JVM, family, dir), and the dataset's index version
+    * is bumped when it actually ran — the single choke point that
+    * keeps version-keyed derived caches honest. With `refresh`,
+    * `build` always runs and is recorded without a bump: the
+    * serving-view refreshes, whose caller ([[Maintenance.refreshAll]])
+    * bumps once after every view is current. Returns `paths`. */
+  private[graft] def built[A](family: String, dir: String, paths: A,
+      refresh: Boolean = false)(build: => Unit): A = {
+    if (refresh) { build; builds.put((family, dir), ()) }
+    else builds.getOrElseUpdate((family, dir), { build; bumpVersion(dir) })
+    paths
   }
+
+  /** Where every process's root lives: `$TMPDIR/graft_index`. */
+  private def rootsDir: java.nio.file.Path = java.nio.file.Paths.get(
+    sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_index")
+
+  /** This process's root under the system temp dir, holding every
+    * file graft builds outside a dataset. Process-unique so no other
+    * JVM can overwrite it (ADVICE r13); durable past process exit,
+    * because the dumped oracle SQL interpolates index paths and the
+    * DuckDB compare runs in a later process. */
+  def processRoot: java.nio.file.Path = {
+    reapStaleRoots
+    rootsDir.resolve(processToken)
+  }
+
+  /** Per-(process, dataset) index root under [[processRoot]]. */
+  def indexRoot(dir: String): java.nio.file.Path =
+    processRoot.resolve(dir.replaceAll("[^A-Za-z0-9._-]", "_"))
 
   /** Age past which another process's index root is garbage:
     * an exited JVM's root is only ever read again by the DuckDB
@@ -168,7 +187,7 @@ object IndexStore {
     * never touched; IO failures (e.g. a concurrent reaper) are
     * swallowed — reaping is hygiene, not correctness. */
   private lazy val reapStaleRoots: Unit = {
-    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.{Files, Path}
     import scala.jdk.CollectionConverters._
     val cutoff = System.currentTimeMillis() - StaleRootMillis
     def listed(p: Path): Seq[Path] = {
@@ -188,17 +207,10 @@ object IndexStore {
     def reap(p: Path): Unit =
       try deleteTree(p) catch { case _: java.io.IOException => () }
     try {
-      val tmp = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-      val idx = tmp.resolve("graft_index")
-      if (Files.isDirectory(idx))
-        listed(idx)
+      if (Files.isDirectory(rootsDir))
+        listed(rootsDir)
           .filterNot(_.getFileName.toString == processToken)
           .filter(expired).foreach(reap)
-      // the structured ANN corpus uses the same token-suffixed layout
-      listed(tmp)
-        .filter(_.getFileName.toString.startsWith("graft_ann_structured_"))
-        .filterNot(_.getFileName.toString.endsWith(processToken))
-        .filter(expired).foreach(reap)
     } catch { case _: java.io.IOException => () }
   }
 
@@ -224,13 +236,12 @@ object IndexStore {
     * family runs heavy per-doc compute (shingling, gram hashing,
     * chunking) that would otherwise serialize inside the
     * single-row-group scan task. */
-  private def docIndex[A](cache: TrieMap[String, A], s: SparkSession,
+  private def docIndex[A](family: String, s: SparkSession,
       dir: String, paths: A)(write: (DataFrame, String) => Unit): A =
-    built(cache, dir) {
+    built(family, dir, paths) {
       val docs = Tables.fanOut(Tables.documents(s, dir), "doc_id")
       write(docs.filter(isBase(col("doc_id"))), "overwrite")
       write(docs.filter(isDelta(col("doc_id"))), "append")
-      paths
     }
 
   /** (doc_id, gr, pos 1-based, bucket) for every length-3 gram of
@@ -254,7 +265,7 @@ object IndexStore {
     * postings for `dir`'s documents; returns the table path. */
   def ensureTrgmPostings(s: SparkSession, dir: String): String = {
     val path = indexRoot(dir).resolve("trgm_postings").toString
-    docIndex(trgmBuilt, s, dir, path) { (d, mode) =>
+    docIndex("trgm", s, dir, path) { (d, mode) =>
       trgmPostingsOf(d)
         // co-locate each bucket before the partitioned write so a
         // bucket's rows land in one file, sorted for row-group
@@ -294,7 +305,7 @@ object IndexStore {
       root.resolve("word_postings").toString,
       root.resolve("word_doclen").toString,
       root.resolve("word_stats").toString)
-    docIndex(wordBuilt, s, dir, paths) { (d, mode) =>
+    docIndex("word", s, dir, paths) { (d, mode) =>
       wordPostingsOf(d)
         .repartition(col("bucket"))
         .sortWithinPartitions("w", "doc_id")
@@ -323,14 +334,14 @@ object IndexStore {
     * the product of the incremental-maintenance path, and the
     * sim_ivf_* oracles certify it end-to-end (the trigram-postings
     * discipline). */
-  def ensureIvf(s: SparkSession, dir: String): IvfPaths =
-    built(ivfBuilt, dir) {
+  def ensureIvf(s: SparkSession, dir: String): IvfPaths = {
+    val root = indexRoot(dir)
+    val paths = IvfPaths(
+      root.resolve("ivf_centroids").toString,
+      root.resolve("ivf_assignments").toString)
+    built("ivf", dir, paths) {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
-      val root = indexRoot(dir)
-      val paths = IvfPaths(
-        root.resolve("ivf_centroids").toString,
-        root.resolve("ivf_assignments").toString)
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("e"))
@@ -356,8 +367,8 @@ object IndexStore {
         .coalesce(1)
         .write.mode("overwrite").parquet(paths.centroids)
       appendIvf(s, paths, emb.filter(isDelta(col("vec_id"))))
-      paths
     }
+  }
 
   /** MinHash dedup index parameters — the SAME (nHashes, bands)
     * the scan-side dd_minhash_lsh uses, so the indexed serve is a
@@ -373,8 +384,6 @@ object IndexStore {
 
   case class MinhashPaths(shingles: String, bands: String,
       cbands: String, cstats: String)
-
-  private val mhBuilt = TrieMap.empty[String, MinhashPaths]
 
   /** Per-doc MinHash signature projection — doc_id, hs (the 3-gram
     * shingle hashes, the exact-verify fingerprint), sig (the 32-hash
@@ -436,7 +445,7 @@ object IndexStore {
       root.resolve("mh_bands").toString,
       root.resolve("mh_cbands").toString,
       root.resolve("mh_cstats").toString)
-    docIndex(mhBuilt, s, dir, paths) { (d, mode) =>
+    docIndex("minhash", s, dir, paths) { (d, mode) =>
       val sh = minhashShingles(s, d)
         .localCheckpoint() // feeds BOTH table writes below
       Tables.packForWrite(sh.select(col("doc_id"), col("hs")))
@@ -461,8 +470,6 @@ object IndexStore {
 
   case class SimhashPaths(sigs: String)
 
-  private val shBuilt = TrieMap.empty[String, SimhashPaths]
-
   /** Persisted SimHash near-dup index (VERDICT r15 task #4 — the
     * last dedup family member still recomputing signatures per run):
     * one probe-keyed signature table (doc_id, simhash, k), hive-
@@ -482,7 +489,7 @@ object IndexStore {
     * twin certifies the content end-to-end). */
   def ensureSimhash(s: SparkSession, dir: String): SimhashPaths = {
     val paths = SimhashPaths(indexRoot(dir).resolve("simhash_sigs").toString)
-    docIndex(shBuilt, s, dir, paths) { (d, mode) =>
+    docIndex("simhash", s, dir, paths) { (d, mode) =>
       d.withColumn("words", split(col("text"), " "))
         .select(col("doc_id"),
           transform(
@@ -500,8 +507,6 @@ object IndexStore {
 
   case class Gram13Paths(grams: String)
 
-  private val gram13Built = TrieMap.empty[String, Gram13Paths]
-
   /** Persisted 13-gram fingerprint index for decontamination: the
     * per-doc distinct 13-gram hashes (doc_id, g) — append-stable
     * facts. This is the textbook case for the build→serve split:
@@ -511,14 +516,12 @@ object IndexStore {
     * re-shingling the corpus per release. */
   def ensureGram13(s: SparkSession, dir: String): Gram13Paths = {
     val paths = Gram13Paths(indexRoot(dir).resolve("decon_grams").toString)
-    docIndex(gram13Built, s, dir, paths) { (d, mode) =>
+    docIndex("gram13", s, dir, paths) { (d, mode) =>
       Tables.packForWrite(gram13Of(d)).write.mode(mode).parquet(paths.grams)
     }
   }
 
   case class WinnowPaths(fps: String)
-
-  private val winnowBuilt = TrieMap.empty[String, WinnowPaths]
 
   /** Persisted winnowing fingerprint index: the selected (doc_id,
     * fp) rows — per-doc facts from the position-local windowed-min
@@ -529,7 +532,7 @@ object IndexStore {
     * pair-search serve into joins over a slim long-pair table. */
   def ensureWinnow(s: SparkSession, dir: String): WinnowPaths = {
     val paths = WinnowPaths(indexRoot(dir).resolve("winnow_fps").toString)
-    docIndex(winnowBuilt, s, dir, paths) { (d, mode) =>
+    docIndex("winnow", s, dir, paths) { (d, mode) =>
       d.select(col("doc_id"),
           expr(s"winnow_fps(split(text, ' '), " +
             s"${graft.operators.TextQueries.WinnowWindow})").as("fps"))
@@ -540,8 +543,6 @@ object IndexStore {
   }
 
   case class CdcPaths(chunks: String, census: String)
-
-  private val cdcBuilt = TrieMap.empty[String, CdcPaths]
 
   /** Persisted content-defined-chunking index: per-doc chunk digests
     * (`cdc_chunks`: doc_id, cid, h — append-stable facts; the
@@ -557,7 +558,7 @@ object IndexStore {
     val paths = CdcPaths(
       root.resolve("cdc_chunks").toString,
       root.resolve("cdc_census").toString)
-    docIndex(cdcBuilt, s, dir, paths) { (d, mode) =>
+    docIndex("cdc", s, dir, paths) { (d, mode) =>
       val ch = graft.operators.RetrievalQueries.cdcChunkHashes(d)
         .localCheckpoint() // feeds both table writes below
       Tables.packForWrite(ch).write.mode(mode).parquet(paths.chunks)
@@ -567,8 +568,6 @@ object IndexStore {
   }
 
   case class ContainmentPaths(docs: String, freq: String)
-
-  private val contBuilt = TrieMap.empty[String, ContainmentPaths]
 
   /** Persisted containment-join index: the per-doc SORTED gram-hash
     * fingerprints (`cont_docs`: doc_id, g, na — the probe, posting,
@@ -588,7 +587,7 @@ object IndexStore {
     val paths = ContainmentPaths(
       root.resolve("cont_docs").toString,
       root.resolve("cont_freq").toString)
-    docIndex(contBuilt, s, dir, paths) { (d, mode) =>
+    docIndex("containment", s, dir, paths) { (d, mode) =>
       val fp = d
         .withColumn("words", split(col("text"), " "))
         .select(col("doc_id"),
@@ -613,8 +612,6 @@ object IndexStore {
   case class GraphPaths(pairs: String, freq: String, adj: String,
       stats: String)
 
-  private val graphBuilt = TrieMap.empty[String, GraphPaths]
-
   /** Persisted co-purchase graph index (VERDICT r15 task #1 — the
     * build→serve twin discipline applied to the graph family): the
     * basket pair census `pairs` (u < v, partial co-occurrence count
@@ -632,14 +629,14 @@ object IndexStore {
     * end-to-end. The split is keyed on ORDERS ([[isDelta]] on
     * l_orderkey), modeling order-batch arrival: a basket arrives
     * whole; rows never join an already-indexed order later. */
-  def ensureGraphEdges(s: SparkSession, dir: String): GraphPaths =
-    built(graphBuilt, dir) {
-      val root = indexRoot(dir)
-      val paths = GraphPaths(
-        root.resolve("graph_pairs").toString,
-        root.resolve("graph_freq").toString,
-        root.resolve("graph_adj").toString,
-        root.resolve("graph_stats").toString)
+  def ensureGraphEdges(s: SparkSession, dir: String): GraphPaths = {
+    val root = indexRoot(dir)
+    val paths = GraphPaths(
+      root.resolve("graph_pairs").toString,
+      root.resolve("graph_freq").toString,
+      root.resolve("graph_adj").toString,
+      root.resolve("graph_stats").toString)
+    built("graph", dir, paths) {
       val li = Tables.lineitem(s, dir)
       def write(d: DataFrame, mode: String): Unit = {
         val items = d
@@ -662,8 +659,8 @@ object IndexStore {
       write(li.filter(isBase(col("l_orderkey"))), "overwrite")
       write(li.filter(isDelta(col("l_orderkey"))), "append")
       writeGraphViews(s, paths)
-      paths
     }
+  }
 
   /** Serving views of the graph index, re-derived from the merged
     * pairs table (r18, extracted r20 for [[graft.sources
@@ -712,8 +709,6 @@ object IndexStore {
 
   case class BaseClusterPaths(labels: String, edges: String)
 
-  private val baseClustersBuilt = TrieMap.empty[String, BaseClusterPaths]
-
   /** Persisted near-dup cluster state of the BASE split (r18): the
     * verified edge set and the converged min labels over base docs,
     * both derived from the persisted MinHash cluster bands +
@@ -723,19 +718,20 @@ object IndexStore {
     * derived serving view refreshed from the maintained index
     * tables. */
   def ensureBaseClusters(s: SparkSession, dir: String): BaseClusterPaths =
-    built(baseClustersBuilt, dir)(writeBaseClusters(s, dir))
+    baseClusters(s, dir, refresh = false)
 
-  private def writeBaseClusters(s: SparkSession,
-      dir: String): BaseClusterPaths = {
+  private def baseClusters(s: SparkSession, dir: String,
+      refresh: Boolean): BaseClusterPaths = {
     val root = indexRoot(dir)
     val paths = BaseClusterPaths(
       root.resolve("cc_base_labels").toString,
       root.resolve("cc_base_edges").toString)
-    val (labels, edges) =
-      graft.operators.DedupCluster.baseClusterState(s, dir)
-    labels.write.mode("overwrite").parquet(paths.labels)
-    edges.write.mode("overwrite").parquet(paths.edges)
-    paths
+    built("base_clusters", dir, paths, refresh) {
+      val (labels, edges) =
+        graft.operators.DedupCluster.baseClusterState(s, dir)
+      labels.write.mode("overwrite").parquet(paths.labels)
+      edges.write.mode("overwrite").parquet(paths.edges)
+    }
   }
 
   /** Refresh path for the base cluster state (labels are not additive
@@ -743,13 +739,7 @@ object IndexStore {
     * maintained MinHash index tables. Same version and
     * maintenance-window contract as [[refreshGraphViews]]. */
   private[graft] def refreshBaseClusters(s: SparkSession,
-      dir: String): BaseClusterPaths = {
-    val paths = writeBaseClusters(s, dir)
-    baseClustersBuilt.put(dir, paths)
-    paths
-  }
-
-  private val ranksBuilt = TrieMap.empty[String, String]
+      dir: String): BaseClusterPaths = baseClusters(s, dir, refresh = true)
 
   /** Persisted converged PageRank of the BASE-split part↔supplier
     * graph (r18) — the serving view the incremental query
@@ -759,14 +749,16 @@ object IndexStore {
     * at build time from the maintained base split; the warm-start
     * serve then pays 2–3 power steps instead of the from-scratch 8. */
   def ensureBaseRanks(s: SparkSession, dir: String): String =
-    built(ranksBuilt, dir)(writeBaseRanks(s, dir))
+    baseRanks(s, dir, refresh = false)
 
-  private def writeBaseRanks(s: SparkSession, dir: String): String = {
+  private def baseRanks(s: SparkSession, dir: String,
+      refresh: Boolean): String = {
     val path = indexRoot(dir).resolve("graph_base_ranks").toString
-    graft.operators.GraphQueries.baseConvergedRanks(s, dir)
-      .select(col("node"), col("pr"))
-      .write.mode("overwrite").parquet(path)
-    path
+    built("base_ranks", dir, path, refresh) {
+      graft.operators.GraphQueries.baseConvergedRanks(s, dir)
+        .select(col("node"), col("pr"))
+        .write.mode("overwrite").parquet(path)
+    }
   }
 
   /** Refresh path for the converged base ranks (a rank vector shifts
@@ -774,11 +766,7 @@ object IndexStore {
     * maintained base split. Same version and maintenance-window
     * contract as [[refreshGraphViews]]. */
   private[graft] def refreshBaseRanks(s: SparkSession,
-      dir: String): String = {
-    val path = writeBaseRanks(s, dir)
-    ranksBuilt.put(dir, path)
-    path
-  }
+      dir: String): String = baseRanks(s, dir, refresh = true)
 
   /** Corpus catalog (r18): the per-document ownership/digest table a
     * lakehouse maintains as data arrives — (doc_id, source,
@@ -789,14 +777,12 @@ object IndexStore {
     * the standing incremental discipline every index family shares. */
   case class CatalogPaths(digests: String, stats: String)
 
-  private val catalogBuilt = TrieMap.empty[String, CatalogPaths]
-
   def ensureCatalog(s: SparkSession, dir: String): CatalogPaths = {
     val root = indexRoot(dir)
     val paths = CatalogPaths(
       root.resolve("catalog_digests").toString,
       root.resolve("catalog_stats").toString)
-    docIndex(catalogBuilt, s, dir, paths) { (docs, mode) =>
+    docIndex("catalog", s, dir, paths) { (docs, mode) =>
       val split = if (mode == "overwrite") "base" else "delta"
       val d = docs
         .select(lit(split).as("split"),
@@ -825,8 +811,6 @@ object IndexStore {
 
   case class PqPaths(codebooks: String, codes: String)
 
-  private val pqBuilt = TrieMap.empty[String, PqPaths]
-
   /** Fit the PQ codebooks on the IVF base split and encode the whole
     * corpus, cell-partitioned next to the IVF index. The INPUT is the
     * persisted IVF assignments table (vectors + cells already
@@ -837,15 +821,15 @@ object IndexStore {
     * trigram/word/IVF, the standing index IS the product of the
     * incremental-maintenance path and the serve oracle certifies it
     * end-to-end. */
-  def ensurePq(s: SparkSession, dir: String): PqPaths =
-    built(pqBuilt, dir) {
+  def ensurePq(s: SparkSession, dir: String): PqPaths = {
+    val root = indexRoot(dir)
+    val paths = PqPaths(
+      root.resolve("pq_codebooks").toString,
+      root.resolve("pq_codes").toString)
+    built("pq", dir, paths) {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val ivf = ensureIvf(s, dir)
-      val root = indexRoot(dir)
-      val paths = PqPaths(
-        root.resolve("pq_codebooks").toString,
-        root.resolve("pq_codes").toString)
       val av = s.read.parquet(ivf.assignments)
         .select(col("vec_id"), col("label"), col("e"), col("cell"))
       val base = av.filter(isBase(col("vec_id")))
@@ -880,8 +864,8 @@ object IndexStore {
         .write.mode("overwrite").parquet(paths.codebooks)
       appendPq(s, paths, base, "overwrite")
       appendPq(s, paths, av.filter(isDelta(col("vec_id"))), "append")
-      paths
     }
+  }
 
   /** Encode vectors against the PERSISTED codebooks and append to
     * the cell-partitioned codes table — the steady-state write path

@@ -8,11 +8,12 @@ import graft.core.{Derived, Tables}
 /** Storage-layout operators promoted into the registry (VERDICT r4/r5
   * task: "layout-pruned aggregate with a plan assert"): a
   * partition-pruned aggregate and a manifest-skipped ranged aggregate.
-  * Both materialize a laid-out copy of the source under a
-  * deterministic temp path and then run the query THROUGH the layout,
-  * so Verify/Bench exercise the pruning path itself; the oracle is
-  * plain SQL over the original table — layout must be
-  * semantics-preserving.
+  * Both materialize a laid-out copy of the source as a `layout_*`
+  * table under the dataset's [[IndexStore.indexRoot]] (process-unique,
+  * reaped with the rest of the process root) and then run the query
+  * THROUGH the layout, so Verify/Bench exercise the pruning path
+  * itself; the oracle is plain SQL over the original table — layout
+  * must be semantics-preserving.
   *
   * At 100 TB these layouts are written once by the ingest job and
   * amortized over every query; re-writing per call here is the test
@@ -21,17 +22,18 @@ import graft.core.{Derived, Tables}
 object LayoutQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Deterministic per-SF temp root (idempotent overwrite per call). */
-  private def tmpRoot(dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_layout_$tag"
-  }
+  /** Path of the layout copy `name` of `dir`'s data. */
+  private[graft] def layoutPath(dir: String, name: String): String =
+    IndexStore.indexRoot(dir).resolve(s"layout_$name").toString
 
   /** One write per layout path and application
     * ([[graft.core.Derived.Memo]], keyed by the path, which names the
     * dataset): ingest writes the layout once and every query amortizes
     * it — re-writing per call would make the bench measure the writer,
-    * not the pruned read these operators exist to demonstrate. */
+    * not the pruned read these operators exist to demonstrate. Not
+    * IndexStore's build registry: a layout copy is not index content,
+    * and a registry build bumps the index version that keys
+    * [[graft.operators.PipelineQueries.probeCtx]]. */
   private val written = Derived.Memo[Unit]("layout_written")
 
   private def writeOnce(s: SparkSession, path: String)(w: => Unit): Unit =
@@ -43,7 +45,7 @@ object LayoutQueries {
     * filter never lists, let alone reads, the other languages'
     * directories. */
   def l4PartitionPruned(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${tmpRoot(dir)}/documents_by_lang"
+    val path = layoutPath(dir, "documents_by_lang")
     writeOnce(s, path)(Tables.documents(s, dir)
       .write.partitionBy("lang").mode("overwrite").parquet(path))
     s.read.parquet(path)
@@ -60,7 +62,7 @@ object LayoutQueries {
     * ([[DataSkipping.prunedRead]]). LayoutSpec asserts the candidate
     * file list is a strict subset. */
   def l5ManifestSkip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${tmpRoot(dir)}/orders_clustered"
+    val path = layoutPath(dir, "orders_clustered")
     writeOnce(s, path)(Tables.orders(s, dir)
       .repartitionByRange(4, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
@@ -93,8 +95,8 @@ object LayoutQueries {
     * compare. FS listing is driver-side layout METADATA, same
     * contract as the DataSkipping manifest. */
   def l9Compaction(s: SparkSession, dir: String): DataFrame = {
-    val fragPath = s"${tmpRoot(dir)}/documents_fragmented"
-    val compPath = s"${tmpRoot(dir)}/documents_compacted"
+    val fragPath = layoutPath(dir, "documents_fragmented")
+    val compPath = layoutPath(dir, "documents_compacted")
     writeOnce(s, compPath) {
       Tables.documents(s, dir).repartition(64)
         .write.mode("overwrite").parquet(fragPath)
@@ -105,7 +107,7 @@ object LayoutQueries {
         .mode("overwrite").parquet(compPath)
     }
     // resolve the filesystem OF compPath, not the default FS — the
-    // audit must keep working if tmpRoot points at s3a/hdfs (ADVICE r11)
+    // audit must keep working if the root points at s3a/hdfs (ADVICE r11)
     val compHadoopPath = new org.apache.hadoop.fs.Path(compPath)
     val fs = compHadoopPath
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -154,7 +156,7 @@ object LayoutQueries {
     * layout). Oracle is the plain range aggregate: layout must be
     * semantics-preserving. */
   def l10Zorder(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${tmpRoot(dir)}/orders_zorder"
+    val path = layoutPath(dir, "orders_zorder")
     writeOnce(s, path) {
       val b = Tables.orders(s, dir).agg(
         min(col("o_orderkey")).cast("long"),

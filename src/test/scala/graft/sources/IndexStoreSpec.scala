@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -283,20 +283,55 @@ class IndexStoreSpec extends SparkSpec {
         .selectExpr("doc_id", "text", "'en' AS lang", "'s' AS source",
           "CAST(length(text) AS LONG) AS n_chars")
         .write.parquet(s"$dir/documents.parquet")
-      val v0 = IndexStore.indexVersion(dir)
-      val first = IndexStore.ensureGram13(spark, dir)
-      assert(IndexStore.indexVersion(dir) == v0 + 1)
-      // base overwrite + delta append together hold every doc
-      assert(spark.read.parquet(first.grams).select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSet == (0L until 10L).toSet)
-      assert(IndexStore.ensureGram13(spark, dir) == first)
-      assert(IndexStore.indexVersion(dir) == v0 + 1)
+      // each family's paths and the table that holds one row per doc
+      def family[A](ensure: (SparkSession, String) => A)(
+          docTable: A => String) =
+        () => { val p = ensure(spark, dir); (p, docTable(p)) }
+      val families = Seq(
+        "trgm" -> family(IndexStore.ensureTrgmPostings)(identity),
+        "word" -> family(IndexStore.ensureWordPostings)(_.doclen),
+        "minhash" -> family(IndexStore.ensureMinhash)(_.shingles),
+        "simhash" -> family(IndexStore.ensureSimhash)(_.sigs),
+        "gram13" -> family(IndexStore.ensureGram13)(_.grams),
+        "winnow" -> family(IndexStore.ensureWinnow)(_.fps),
+        "cdc" -> family(IndexStore.ensureCdcChunks)(_.chunks),
+        "containment" -> family(IndexStore.ensureContainment)(_.docs),
+        "catalog" -> family(IndexStore.ensureCatalog)(_.digests))
+      families.foreach { case (name, ensure) =>
+        val v0 = IndexStore.indexVersion(dir)
+        val (first, docTable) = ensure()
+        assert(IndexStore.indexVersion(dir) == v0 + 1, name)
+        // base overwrite + delta append together hold every doc
+        assert(spark.read.parquet(docTable).select("doc_id").distinct()
+          .collect().map(_.getLong(0)).toSet == (0L until 10L).toSet, name)
+        assert(ensure()._1 == first, name)
+        assert(IndexStore.indexVersion(dir) == v0 + 1, name)
+      }
     } finally {
       import scala.jdk.CollectionConverters._
       val files = java.nio.file.Files.walk(dirPath)
       try files.iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.delete)
       finally files.close()
+    }
+  }
+
+  test("the ANN corpus and the layout copies are built under this " +
+      "process's root") {
+    val root = java.nio.file.Paths.get(
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_index",
+      IndexStore.processToken)
+    assert(IndexStore.processRoot == root)
+    val corpus = graft.operators.AnnBenchCorpus.ensure(spark, perCluster = 10)
+    assert(java.nio.file.Paths.get(corpus).startsWith(root), corpus)
+    // built once, through the registry
+    assert(graft.operators.AnnBenchCorpus.ensure(spark, perCluster = 10)
+      == corpus)
+    assert(IndexStore.indexVersion(corpus) == 1L)
+    val files = scannedFiles(LayoutQueries.l4PartitionPruned(spark, sfDir))
+    assert(files.nonEmpty, "layout query reads no files at all")
+    files.foreach { f =>
+      assert(f.contains(s"$root/"), s"layout file outside $root: $f")
     }
   }
 }
