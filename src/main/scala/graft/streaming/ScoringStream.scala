@@ -1,10 +1,14 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -23,9 +27,9 @@ import graft.schema.Transaction
   *    (spark_streaming_app.py:352-363 collect()s every fraud row to
   *    the driver and loops a Python Kafka producer — O(alerts) driver
   *    memory; at scale the driver dies first);
-  *  - the micro-batch is persisted once and reused across the count /
-  *    score / alert actions (the reference re-executes lineage 4× per
-  *    batch);
+  *  - a micro-batch runs one Spark job: the alert write, which also
+  *    fills the batch's record and fraud counts through `observe`
+  *    (the reference re-executes lineage 4× per batch);
   *  - graceful shutdown is a StreamingQuery.stop() hook — the conf
   *    the reference sets (spark.streaming.stopGracefullyOnShutdown,
   *    spark_streaming_app.py:182) only affects legacy DStreams and is
@@ -124,10 +128,26 @@ object ScoringStream {
       Files.writeString(Paths.get(path), json)
   }
 
+  /** How long a batch waits, after `alertSink` returns, for the
+    * counts that the sink's action observed. Spark fills an
+    * `Observation` from a listener-bus event shortly after the action
+    * ends; a sink that ran no action never fills it, and the batch
+    * fails once this wait is over instead of hanging the query. */
+  val SinkObservationTimeout: FiniteDuration = 10.seconds
+
   /** T1–T4: the micro-batch loop. `parsed` must be a streaming
-    * DataFrame in Transaction shape; `alertSink` receives the alert
-    * JSON frame of each non-empty batch (wire it to a Kafka/file/
-    * memory writer). */
+    * DataFrame in Transaction shape.
+    *
+    * `alertSink` receives the alert JSON frame of every non-empty
+    * batch, and that frame may hold no rows (wire it to a Kafka/file/
+    * memory writer). The sink must run the frame exactly once, with
+    * one action that reads all of it (a write, `collect`, `count`):
+    * that action is the batch's only Spark job, and it also counts
+    * the batch's records (before `model.transform`, so a model that
+    * drops rows does not shrink the count) and its fraud rows. A sink
+    * that returns without running the frame fails the batch after
+    * [[SinkObservationTimeout]]. The sink runs inside the batch's
+    * `processing_time_ms`. */
   def start(
       parsed: DataFrame,
       model: PipelineModel,
@@ -136,34 +156,31 @@ object ScoringStream {
       stats: StatsAccumulator): StreamingQuery =
     parsed.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // Per-batch job budget (r21, guide §1.2 step 2): the former
-        // shape ran FOUR actions per micro-batch — isEmpty probe,
-        // input count, fraud count, alert write — each paying job
-        // submission + scheduling on a 5k-row batch, ~40% of the
-        // 625 ms/batch fixed cost. Scoring is row-wise, so
-        // count(scored) == count(batch): ONE aggregate yields the
-        // record count AND the fraud count (and doubles as the T3
-        // empty-batch guard — n == 0 records no stats, exactly the
-        // old isEmpty semantics), so a non-alerting batch runs ONE
-        // job and an alerting batch two. The input persist is gone
-        // with its count (scored is the only consumer now).
         val t0 = System.nanoTime()
-        val scored = model.transform(batch).persist()
-        try {
-          val row = scored.agg(
-            count(lit(1)),
-            count(when(col("prediction") === 1.0, 1))).head()
-          val n = row.getLong(0)
-          val nFraud = row.getLong(1)
-          if (n > 0) { // T3 empty-batch guard
-            if (nFraud > 0) alertSink(alerts(scored))
-            stats.record(batchId, n, nFraud,
-              (System.nanoTime() - t0) / 1000000)
-          }
-        } finally scored.unpersist()
+        val records = Observation()
+        val fraud = Observation()
+        val scored = model
+          .transform(batch.observe(records, count(lit(1)).as("n")))
+          .observe(fraud,
+            count(when(col("prediction") === 1.0, 1)).as("n_fraud"))
+        alertSink(alerts(scored))
+        val n = observed(records)
+        if (n > 0) // T3 empty-batch guard
+          stats.record(batchId, n, observed(fraud),
+            (System.nanoTime() - t0) / 1000000)
       }
       .option("checkpointLocation", checkpointDir) // T2
       .start()
+
+  /** The one count `o` observed, once the sink's action filled it. */
+  private def observed(o: Observation): Long =
+    try Await.result(o.future, SinkObservationTimeout).getLong(0)
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        "alertSink returned without running the alert frame it was " +
+          "given: the sink must run that frame exactly once, with one " +
+          "action that reads all of it (a write, collect or count)")
+    }
 
   /** T5 hook body: stop the query (finishing the in-flight batch);
     * idempotent — a no-op when the query already terminated.

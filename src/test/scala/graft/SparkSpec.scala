@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +19,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** sf0.001 testdata — the smoke-scale fixtures. */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp dir and deletes the dir's whole
+    * tree afterwards. */
+  def withTempDir[A](prefix: String)(body: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally deleteTree(dir)
+  }
+
+  /** Deletes `dir` and everything under it; a no-op when missing. */
+  def deleteTree(dir: Path): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
 
   override def afterAll(): Unit = {
     // One JVM per forked suite; let the last stop win quietly.

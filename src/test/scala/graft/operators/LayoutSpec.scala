@@ -12,17 +12,18 @@ import graft.core.Tables
 class LayoutSpec extends SparkSpec {
 
   test("partitionBy layout prunes partitions on read") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_part").toString
-    Tables.documents(spark, sfDir)
-      .write.partitionBy("lang").mode("overwrite").parquet(tmp)
-    val pruned = spark.read.parquet(tmp).filter(col("lang") === "en")
-    val expected = Tables.documents(spark, sfDir)
-      .filter(col("lang") === "en").count()
-    assert(pruned.count() == expected)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(lang"),
-      s"expected partition filter in:\n$plan")
+    withTempDir("graft_part") { dir =>
+      val tmp = dir.toString
+      Tables.documents(spark, sfDir)
+        .write.partitionBy("lang").mode("overwrite").parquet(tmp)
+      val pruned = spark.read.parquet(tmp).filter(col("lang") === "en")
+      val expected = Tables.documents(spark, sfDir)
+        .filter(col("lang") === "en").count()
+      assert(pruned.count() == expected)
+      val plan = pruned.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(lang"),
+        s"expected partition filter in:\n$plan")
+    }
   }
 
   test("bucketed tables join without a shuffle exchange") {
@@ -87,27 +88,30 @@ class LayoutSpec extends SparkSpec {
 
   test("compaction bounds file sizes and splits exactly at the target") {
     import spark.implicits._
-    // Corpus forcing real splits: 450 rows of one source, 120 of
-    // another -> ceil(450/200)=3 and ceil(120/200)=1 files.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString
-    ((1 to 450).map(i => (i.toLong, s"text $i", "en", "srcA")) ++
-      (1 to 120).map(i => (500L + i, s"text $i", "en", "srcB")))
-      .toDF("doc_id", "text", "lang", "source")
-      .selectExpr("doc_id", "text", "lang", "source",
-        "CAST(length(text) AS LONG) AS n_chars")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.sources.LayoutQueries.l9Compaction(spark, tmp)
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got("srcA") == ((450L, 3L)), s"srcA must split: $got")
-    assert(got("srcB") == ((120L, 1L)), s"srcB must not: $got")
-    // the fragmented precursor really was the small-files shape
-    val frag = new java.io.File(graft.sources.LayoutQueries
-      .layoutPath(tmp, "documents_fragmented"))
-    val nFrag = frag.listFiles().count(f =>
-      f.isFile && f.getName.startsWith("part-"))
-    assert(nFrag > 10, s"fragmented copy should be many files, got $nFrag")
+    withTempDir("graft_compact") { dir =>
+      val tmp = dir.toString
+      try {
+        // Corpus forcing real splits: 450 rows of one source, 120 of
+        // another -> ceil(450/200)=3 and ceil(120/200)=1 files.
+        ((1 to 450).map(i => (i.toLong, s"text $i", "en", "srcA")) ++
+          (1 to 120).map(i => (500L + i, s"text $i", "en", "srcB")))
+          .toDF("doc_id", "text", "lang", "source")
+          .selectExpr("doc_id", "text", "lang", "source",
+            "CAST(length(text) AS LONG) AS n_chars")
+          .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+        val got = graft.sources.LayoutQueries.l9Compaction(spark, tmp)
+          .collect().map(r => r.getString(0) ->
+            ((r.getLong(1), r.getLong(2)))).toMap
+        assert(got("srcA") == ((450L, 3L)), s"srcA must split: $got")
+        assert(got("srcB") == ((120L, 1L)), s"srcB must not: $got")
+        // the fragmented precursor really was the small-files shape
+        val frag = new java.io.File(graft.sources.LayoutQueries
+          .layoutPath(tmp, "documents_fragmented"))
+        val nFrag = frag.listFiles().count(f =>
+          f.isFile && f.getName.startsWith("part-"))
+        assert(nFrag > 10, s"fragmented copy should be many files, got $nFrag")
+      } finally deleteTree(graft.sources.IndexStore.indexRoot(tmp))
+    }
   }
 
   test("z-order makes the SECONDARY column prunable; linear clustering doesn't") {

@@ -308,11 +308,8 @@ class IndexStoreSpec extends SparkSpec {
         assert(IndexStore.indexVersion(dir) == v0 + 1, name)
       }
     } finally {
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files.walk(dirPath)
-      try files.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally files.close()
+      deleteTree(dirPath)
+      deleteTree(IndexStore.indexRoot(dir))
     }
   }
 

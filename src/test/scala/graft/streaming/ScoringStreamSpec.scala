@@ -1,7 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.feature.SQLTransformer
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.SparkSpec
 import graft.ml.{FraudPipeline, Transactions}
@@ -85,6 +94,97 @@ class ScoringStreamSpec extends SparkSpec {
       // T2: checkpoint directory was written.
       assert(new java.io.File(checkpoint, "offsets").list().nonEmpty)
     } finally q.stop()
+  }
+
+  /** A started scoring query over a fresh MemoryStream and temp
+    * checkpoint, handed to `body`; stopped afterwards. */
+  private def withScoring(model: PipelineModel,
+      sink: DataFrame => Unit, stats: ScoringStream.StatsAccumulator)(
+      body: (MemoryStream[String], StreamingQuery) => Unit): Unit = {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val input = MemoryStream[String]
+    val parsed = ScoringStream.parse(
+      input.toDF().select(col("value").cast("binary").as("value")))
+    withTempDir("graft_ckpt") { checkpoint =>
+      val q = ScoringStream.start(parsed, model, checkpoint.toString,
+        sink, stats)
+      try body(input, q) finally q.stop()
+    }
+  }
+
+  /** An alert sink that runs one action: collect the JSON rows. */
+  private def collecting(into: ArrayBuffer[String]): DataFrame => Unit =
+    df => into.synchronized { into ++= df.collect().map(_.getString(0)) }
+
+  /** Returns once the listener bus's shared queue has delivered every
+    * event posted so far: an Observation completes from that queue.
+    * It runs on a session of its own because a session that has used
+    * an Observation no longer serializes, and the model's training
+    * summary, which every scoring task ships, holds `spark`. */
+  private def drainSharedQueue(): Unit = {
+    val o = Observation()
+    spark.newSession().range(1).observe(o, count(lit(1)).as("n")).collect()
+    o.get
+  }
+
+  test("a non-empty batch runs one Spark job: the sink's action") {
+    val stats = new ScoringStream.StatsAccumulator
+    val collected = ArrayBuffer.empty[String]
+    withScoring(model, collecting(collected), stats) { (input, q) =>
+      val jobs = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(p =>
+              p.getProperty(StreamExecution.QUERY_ID_KEY) == q.id.toString))
+            jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val rows = wireJson(200)
+        input.addData(rows)
+        q.processAllAvailable()
+        input.addData(rows.take(50))
+        q.processAllAvailable()
+        drainSharedQueue()
+        assert(stats.totalBatches == 2)
+        assert(jobs.get == 2, s"${jobs.get} jobs for 2 batches")
+        assert(stats.totalFraud == collected.size)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("records are counted on the input, before a model that drops rows") {
+    val dropping = new Pipeline().setStages(Array(model,
+        new SQLTransformer()
+          .setStatement("SELECT * FROM __THIS__ WHERE type <> 'PAYMENT'")))
+      .fit(txns)
+    val stats = new ScoringStream.StatsAccumulator
+    val collected = ArrayBuffer.empty[String]
+    withScoring(dropping, collecting(collected), stats) { (input, q) =>
+      val rows = wireJson(200)
+      assert(rows.exists(_.contains("\"type\":\"PAYMENT\"")),
+        "the fed rows must hold rows the model drops")
+      input.addData(rows)
+      q.processAllAvailable()
+      assert(stats.totalRecords == rows.size)
+      assert(stats.totalFraud == collected.size)
+      assert(!collected.exists(_.contains("\"type\":\"PAYMENT\"")))
+    }
+  }
+
+  test("a sink that never runs its frame fails the batch") {
+    val stats = new ScoringStream.StatsAccumulator
+    withScoring(model, _ => (), stats) { (input, q) =>
+      input.addData(wireJson(20))
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage.contains("run that frame exactly once")),
+        causes.map(_.toString).mkString("\n"))
+      assert(stats.totalBatches == 0)
+    }
   }
 
   test("malformed payloads route to the dead-letter path, not nulls") {
