@@ -1,14 +1,10 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,8 +24,9 @@ import graft.schema.Transaction
   *    the driver and loops a Python Kafka producer — O(alerts) driver
   *    memory; at scale the driver dies first);
   *  - a micro-batch runs one Spark job: the alert write, which also
-  *    fills the batch's record and fraud counts through `observe`
-  *    (the reference re-executes lineage 4× per batch);
+  *    counts the batch's records and fraud rows through
+  *    [[RowCounter]] filters (the reference re-executes lineage 4×
+  *    per batch);
   *  - graceful shutdown is a StreamingQuery.stop() hook — the conf
   *    the reference sets (spark.streaming.stopGracefullyOnShutdown,
   *    spark_streaming_app.py:182) only affects legacy DStreams and is
@@ -128,26 +125,19 @@ object ScoringStream {
       Files.writeString(Paths.get(path), json)
   }
 
-  /** How long a batch waits, after `alertSink` returns, for the
-    * counts that the sink's action observed. Spark fills an
-    * `Observation` from a listener-bus event shortly after the action
-    * ends; a sink that ran no action never fills it, and the batch
-    * fails once this wait is over instead of hanging the query. */
-  val SinkObservationTimeout: FiniteDuration = 10.seconds
-
   /** T1–T4: the micro-batch loop. `parsed` must be a streaming
     * DataFrame in Transaction shape.
     *
     * `alertSink` receives the alert JSON frame of every non-empty
     * batch, and that frame may hold no rows (wire it to a Kafka/file/
-    * memory writer). The sink must run the frame exactly once, with
-    * one action that reads all of it (a write, `collect`, `count`):
-    * that action is the batch's only Spark job, and it also counts
-    * the batch's records (before `model.transform`, so a model that
-    * drops rows does not shrink the count) and its fraud rows. A sink
-    * that returns without running the frame fails the batch after
-    * [[SinkObservationTimeout]]. The sink runs inside the batch's
-    * `processing_time_ms`. */
+    * memory writer). The sink must read all of the frame with one
+    * action (a write, `collect`, `count`): that action is the batch's
+    * only Spark job, and it also counts the batch's records (before
+    * `model.transform`, so a model that drops rows does not shrink the
+    * count) and its fraud rows. A sink that reads the frame again
+    * pays for a second job but does not change the counts. A sink
+    * that returns without reading the frame fails the batch. The sink
+    * runs inside the batch's `processing_time_ms`. */
   def start(
       parsed: DataFrame,
       model: PipelineModel,
@@ -157,30 +147,24 @@ object ScoringStream {
     parsed.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val t0 = System.nanoTime()
-        val records = Observation()
-        val fraud = Observation()
-        val scored = model
-          .transform(batch.observe(records, count(lit(1)).as("n")))
-          .observe(fraud,
-            count(when(col("prediction") === 1.0, 1)).as("n_fraud"))
-        alertSink(alerts(scored))
-        val n = observed(records)
+        val records = new RowCounter(batch.sparkSession.sparkContext)
+        val fraud = new RowCounter(batch.sparkSession.sparkContext)
+        alertSink(alerts(model.transform(batch.filter(records.pass)))
+          .filter(fraud.pass))
+        // No partition read: either the sink ran nothing, or the batch
+        // has no partitions at all (a file stream's new empty file).
+        if (!records.ran && !batch.isEmpty)
+          throw new IllegalStateException(
+            "alertSink returned without reading the alert frame it was " +
+              "given: the sink must read all of that frame with one " +
+              "action (a write, collect or count)")
+        val n = records.total
         if (n > 0) // T3 empty-batch guard
-          stats.record(batchId, n, observed(fraud),
+          stats.record(batchId, n, fraud.total,
             (System.nanoTime() - t0) / 1000000)
       }
       .option("checkpointLocation", checkpointDir) // T2
       .start()
-
-  /** The one count `o` observed, once the sink's action filled it. */
-  private def observed(o: Observation): Long =
-    try Await.result(o.future, SinkObservationTimeout).getLong(0)
-    catch {
-      case _: TimeoutException => throw new IllegalStateException(
-        "alertSink returned without running the alert frame it was " +
-          "given: the sink must run that frame exactly once, with one " +
-          "action that reads all of it (a write, collect or count)")
-    }
 
   /** T5 hook body: stop the query (finishing the in-flight batch);
     * idempotent — a no-op when the query already terminated.

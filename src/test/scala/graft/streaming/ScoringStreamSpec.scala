@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
@@ -7,10 +8,12 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.feature.SQLTransformer
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{classic, DataFrame, Observation, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.ml.{FraudPipeline, Transactions}
@@ -19,7 +22,10 @@ import graft.schema.Transaction
 class ScoringStreamSpec extends SparkSpec {
 
   private lazy val txns = Transactions.fromEvents(spark, sfDir).cache()
-  private lazy val model = FraudPipeline.train(txns)
+  // Weighted, so that it alerts on the first sf0.001 rows: the
+  // unweighted fit predicts no fraud there, and the alert path would
+  // go untested.
+  private lazy val model = FraudPipeline.train(txns, weighted = true)
 
   /** JSON wire rows as the producer would emit them (P10). */
   private def wireJson(limit: Int): Seq[String] =
@@ -52,55 +58,11 @@ class ScoringStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("scoring graph emits alerts for fraud rows and tracks stats") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[String]
-    val parsed = ScoringStream.parse(
-      input.toDF().select(col("value").cast("binary").as("value")))
-    val stats = new ScoringStream.StatsAccumulator
-    val collected = scala.collection.mutable.ArrayBuffer.empty[String]
-    val checkpoint = java.nio.file.Files
-      .createTempDirectory("graft_ckpt").toString
-
-    val q = ScoringStream.start(parsed, model, checkpoint,
-      alertDf => collected.synchronized {
-        collected ++= alertDf.collect().map(_.getString(0))
-      },
-      stats)
-    try {
-      val rows = wireJson(200)
-      input.addData(rows)
-      q.processAllAvailable()
-      input.addData(rows.take(50))
-      q.processAllAvailable()
-
-      assert(stats.totalBatches == 2)
-      assert(stats.totalRecords == 250)
-      // Alerts are JSON rows containing the model's outputs.
-      val expectedFraud = FraudPipeline.predict(model, txns.limit(200))
-        .filter(col("fraud_prediction") === 1).count()
-      if (expectedFraud > 0) {
-        assert(collected.nonEmpty)
-        assert(collected.forall(_.contains("\"prediction\":1.0")))
-      }
-      assert(stats.totalFraud ==
-        collected.size) // one alert per fraud row
-      // Stats JSON has the reference's shape.
-      val json = stats.json
-      assert(json.contains("\"total_batches\":2"))
-      assert(json.contains("\"avg_batch_size\":125.0"))
-      assert(json.contains("\"fraud_percentage\""))
-      // T2: checkpoint directory was written.
-      assert(new java.io.File(checkpoint, "offsets").list().nonEmpty)
-    } finally q.stop()
-  }
-
   /** A started scoring query over a fresh MemoryStream and temp
     * checkpoint, handed to `body`; stopped afterwards. */
   private def withScoring(model: PipelineModel,
       sink: DataFrame => Unit, stats: ScoringStream.StatsAccumulator)(
-      body: (MemoryStream[String], StreamingQuery) => Unit): Unit = {
+      body: (MemoryStream[String], StreamingQuery, Path) => Unit): Unit = {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[String]
@@ -109,7 +71,7 @@ class ScoringStreamSpec extends SparkSpec {
     withTempDir("graft_ckpt") { checkpoint =>
       val q = ScoringStream.start(parsed, model, checkpoint.toString,
         sink, stats)
-      try body(input, q) finally q.stop()
+      try body(input, q, checkpoint) finally q.stop()
     }
   }
 
@@ -128,10 +90,11 @@ class ScoringStreamSpec extends SparkSpec {
     o.get
   }
 
-  test("a non-empty batch runs one Spark job: the sink's action") {
+  test("scoring graph emits alerts for fraud rows and tracks stats") {
     val stats = new ScoringStream.StatsAccumulator
     val collected = ArrayBuffer.empty[String]
-    withScoring(model, collecting(collected), stats) { (input, q) =>
+    withScoring(model, collecting(collected), stats) {
+        (input, q, checkpoint) =>
       val jobs = new AtomicInteger
       val listener = new SparkListener {
         override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -147,9 +110,25 @@ class ScoringStreamSpec extends SparkSpec {
         input.addData(rows.take(50))
         q.processAllAvailable()
         drainSharedQueue()
+
         assert(stats.totalBatches == 2)
+        assert(stats.totalRecords == 250)
+        // One Spark job per non-empty batch: the sink's action.
         assert(jobs.get == 2, s"${jobs.get} jobs for 2 batches")
-        assert(stats.totalFraud == collected.size)
+        // Alerts are JSON rows containing the model's outputs.
+        val expectedFraud = FraudPipeline.predict(model, txns.limit(200))
+          .filter(col("fraud_prediction") === 1).count()
+        assert(expectedFraud > 0, "the fed rows must hold fraud")
+        assert(collected.forall(_.contains("\"prediction\":1.0")))
+        assert(stats.totalFraud ==
+          collected.size) // one alert per fraud row
+        // Stats JSON has the reference's shape.
+        val json = stats.json
+        assert(json.contains("\"total_batches\":2"))
+        assert(json.contains("\"avg_batch_size\":125.0"))
+        assert(json.contains("\"fraud_percentage\""))
+        // T2: the checkpoint directory was written.
+        assert(checkpoint.resolve("offsets").toFile.list().nonEmpty)
       } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
@@ -161,7 +140,7 @@ class ScoringStreamSpec extends SparkSpec {
       .fit(txns)
     val stats = new ScoringStream.StatsAccumulator
     val collected = ArrayBuffer.empty[String]
-    withScoring(dropping, collecting(collected), stats) { (input, q) =>
+    withScoring(dropping, collecting(collected), stats) { (input, q, _) =>
       val rows = wireJson(200)
       assert(rows.exists(_.contains("\"type\":\"PAYMENT\"")),
         "the fed rows must hold rows the model drops")
@@ -173,15 +152,69 @@ class ScoringStreamSpec extends SparkSpec {
     }
   }
 
+  test("a V1 source write that runs the frame as a plain RDD fills the counts") {
+    val stats = new ScoringStream.StatsAccumulator
+    val before = PartitionWriteProvider.written.get
+    val sink: DataFrame => Unit = _.write
+      .format(classOf[PartitionWriteProvider].getName).mode("append").save()
+    withScoring(model, sink, stats) { (input, q, _) =>
+      val rows = wireJson(200)
+      input.addData(rows)
+      q.processAllAvailable()
+      assert(stats.totalBatches == 1)
+      assert(stats.totalRecords == rows.size)
+      assert(stats.totalFraud > 0, "the fed rows must hold fraud")
+      assert(stats.totalFraud == PartitionWriteProvider.written.get - before)
+    }
+  }
+
+  test("a sink that reads part of the frame, then all of it, counts each row once") {
+    val stats = new ScoringStream.StatsAccumulator
+    val collected = ArrayBuffer.empty[String]
+    val sink: DataFrame => Unit = df => {
+      df.take(1)
+      collecting(collected)(df)
+    }
+    withScoring(model, sink, stats) { (input, q, _) =>
+      val rows = wireJson(200)
+      input.addData(rows)
+      q.processAllAvailable()
+      assert(collected.nonEmpty, "the fed rows must hold fraud")
+      assert(stats.totalRecords == rows.size)
+      assert(stats.totalFraud == collected.size)
+    }
+  }
+
+  test("a batch with no partitions records nothing and does not fail") {
+    // A new empty file is a batch whose scan has no partitions, so the
+    // sink's action reads none: no count, and no broken contract.
+    val stats = new ScoringStream.StatsAccumulator
+    val collected = ArrayBuffer.empty[String]
+    withTempDir("graft_empty_src") { src =>
+      withTempDir("graft_ckpt") { checkpoint =>
+        Files.createFile(src.resolve("empty.txt"))
+        val q = ScoringStream.start(
+          ScoringStream.parse(spark.readStream.text(src.toString)),
+          model, checkpoint.toString, collecting(collected), stats)
+        try {
+          q.processAllAvailable()
+          assert(q.lastProgress.batchId == 0)
+          assert(stats.totalBatches == 0)
+          assert(collected.isEmpty)
+        } finally q.stop()
+      }
+    }
+  }
+
   test("a sink that never runs its frame fails the batch") {
     val stats = new ScoringStream.StatsAccumulator
-    withScoring(model, _ => (), stats) { (input, q) =>
+    withScoring(model, _ => (), stats) { (input, q, _) =>
       input.addData(wireJson(20))
       val e = intercept[StreamingQueryException](q.processAllAvailable())
       val causes = Iterator.iterate[Throwable](e)(_.getCause)
         .takeWhile(_ != null).toSeq
       assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
-        c.getMessage.contains("run that frame exactly once")),
+        c.getMessage.contains("read all of that frame")),
         causes.map(_.toString).mkString("\n"))
       assert(stats.totalBatches == 0)
     }
@@ -266,4 +299,28 @@ class ScoringStreamSpec extends SparkSpec {
     ScoringStream.stopGracefully(q)
     assert(!q.isActive)
   }
+}
+
+/** A V1 data source whose write runs the frame the way Kafka's sink
+  * does: `save()` plans a `SaveIntoDataSourceCommand`, and
+  * `createRelation` runs `queryExecution.toRdd.foreachPartition`,
+  * which posts no SQL execution event of its own. Counts the rows it
+  * writes into [[PartitionWriteProvider.written]]. */
+class PartitionWriteProvider extends CreatableRelationProvider {
+  override def createRelation(ctx: SQLContext, mode: SaveMode,
+      parameters: Map[String, String], data: DataFrame): BaseRelation = {
+    val rows = ctx.sparkContext.longAccumulator
+    data.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+      .foreachPartition(it => rows.add(it.size.toLong))
+    PartitionWriteProvider.written.addAndGet(rows.value)
+    val written = data.schema
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
+    }
+  }
+}
+
+object PartitionWriteProvider {
+  val written = new java.util.concurrent.atomic.AtomicLong
 }

@@ -1,45 +1,20 @@
 #!/usr/bin/env python3
 """CPU seconds per thread-name class of a running JVM, from start to Ctrl-C.
 
-Usage: python3 tools/thread_cpu.py <pattern> [interval_s]
+Usage: python3 tools/thread_cpu.py <pid> [interval_s]
 
-<pattern> is a regex matched against each process's command line (or a
-pid); the newest matching process is sampled. Every interval (default
-1 s) the script reads /proc/<pid>/task/*/stat and keeps each thread's
-latest utime+stime, so a thread that exits between samples keeps the CPU
-seen at its last sample. On Ctrl-C (or when the process exits) it prints
-the CPU each thread class used since the start. A class is the thread
-name with trailing numbers cut off ("C2 CompilerThre", "Executor task l",
-"GC Thread#"). Threads that exit before their first sample are missed, so
-totals are lower bounds. Reads /proc only.
+Every interval (default 1 s) reads /proc/<pid>/task/*/stat and keeps each
+thread's latest utime+stime. On Ctrl-C, or when the process exits, prints
+the CPU each thread class used since the start. A class is the thread name
+with trailing numbers cut off ("C2 CompilerThre", "Executor task l").
+Threads that exit between samples keep the CPU of their last sample, and
+threads that live less than one interval are missed, so totals are lower
+bounds. Reads /proc only.
 """
 import os
 import re
 import sys
 import time
-
-TICK = os.sysconf("SC_CLK_TCK")
-
-
-def find_pid(pattern):
-    if pattern.isdigit() and os.path.isdir(f"/proc/{pattern}"):
-        return int(pattern)
-    found = []
-    for d in os.listdir("/proc"):
-        if not d.isdigit() or int(d) == os.getpid():
-            continue
-        try:
-            with open(f"/proc/{d}/cmdline", "rb") as f:
-                cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
-            with open(f"/proc/{d}/stat") as f:
-                start = int(f.read().rsplit(")", 1)[1].split()[19])
-        except OSError:
-            continue
-        if re.search(pattern, cmd) and "thread_cpu.py" not in cmd:
-            found.append((start, int(d)))
-    if not found:
-        sys.exit(f"no process matches {pattern!r}")
-    return max(found)[1]
 
 
 def sample(pid, seen):
@@ -54,31 +29,21 @@ def sample(pid, seen):
                 stat = f.read()
         except OSError:
             continue
-        name = stat[stat.index("(") + 1:stat.rindex(")")]
-        fields = stat[stat.rindex(")") + 2:].split()
-        seen[tid] = (name, int(fields[11]) + int(fields[12]))
+        head, _, tail = stat.rpartition(")")
+        fields = tail.split()
+        seen[tid] = (head[head.index("(") + 1:], int(fields[11]) + int(fields[12]))
     return True
-
-
-def thread_class(name):
-    while True:
-        cut = re.sub(r"[\s#\-_.:]*\d+$", "", name)
-        if cut == name or not cut:
-            return name
-        name = cut
 
 
 def main():
     if len(sys.argv) < 2:
         sys.exit(__doc__)
-    pid = find_pid(sys.argv[1])
-    interval = float(sys.argv[2]) if len(sys.argv) > 2 else 1.0
+    pid, interval = sys.argv[1], float(sys.argv[2]) if len(sys.argv) > 2 else 1.0
     start, latest = {}, {}
-    sample(pid, start)
+    if not sample(pid, start):
+        sys.exit(f"no process {pid}")
     latest.update(start)
     t0 = time.time()
-    print(f"sampling pid {pid} every {interval} s; Ctrl-C to stop",
-          file=sys.stderr)
     try:
         while sample(pid, latest):
             time.sleep(interval)
@@ -86,9 +51,9 @@ def main():
         pass
     by_class = {}
     for tid, (name, ticks) in latest.items():
-        used = ticks - start.get(tid, (name, 0))[1]
-        cls = thread_class(name)
-        by_class[cls] = by_class.get(cls, 0) + used / TICK
+        cls = re.sub(r"[\s#\-_.:\d]*\d$", "", name) or name
+        used = (ticks - start.get(tid, (name, 0))[1]) / os.sysconf("SC_CLK_TCK")
+        by_class[cls] = by_class.get(cls, 0) + used
     total = sum(by_class.values())
     print(f"pid {pid}: {total:.1f} s CPU over {time.time() - t0:.1f} s wall")
     for cls, s in sorted(by_class.items(), key=lambda kv: -kv[1]):
